@@ -157,17 +157,20 @@ def bucket_pair_rows(
     the single-row generator, so the pair multiset is IDENTICAL (pair
     order is irrelevant: every consumer groups or distincts downstream).
 
-    What the guard bounds and what it doesn't: pair-generation row
-    memory (each hot row explodes a ≤cap left chunk) and pair-generation
-    parallelism (⌈n/cap⌉ tasks, per-task output within 2× of the mean —
-    the triangular tail skew). The ``collect_list`` aggregation buffer
-    upstream still holds the full bucket in one task (O(n) memory, ~16 MB
-    at 10⁶ ids); splitting THAT would need a pre-aggregation count pass
-    that re-evaluates the upstream pipeline — the exact 2× map CPU the
-    r17 bucket rewrite removed — so it stays, documented, as the
-    residual O(bucket-size) term. Both branches consume the same
-    bucket-groupBy exchange (runtime ReusedExchange), so the upstream
-    pipeline is still evaluated once.
+    What the guard bounds and what it doesn't: the left elements per
+    hot chunk row (≤ cap) and pair-generation parallelism (⌈n/cap⌉
+    tasks, per-task output within 2× of the mean — the triangular tail
+    skew). It does NOT bound per-row memory: every exploded left row, in
+    both the ``lefts`` and ``hlefts`` branches, carries the whole
+    ``ids_col`` array for its tail slice, so each row is O(n). The
+    ``collect_list`` aggregation buffer upstream also holds the full
+    bucket in one task (O(n) memory, ~16 MB at 10⁶ ids); splitting THAT
+    would need a pre-aggregation count pass that re-evaluates the
+    upstream pipeline — the exact 2× map CPU the r17 bucket rewrite
+    removed — so it stays, documented, as a residual O(bucket-size)
+    term. Both branches consume the same bucket-groupBy exchange
+    (runtime ReusedExchange), so the upstream pipeline is still
+    evaluated once.
     """
     arr = F.col(ids_col)
     n = F.size(arr)
@@ -873,8 +876,9 @@ def prefix_filter_pairs(tokens: DataFrame, threshold: float) -> DataFrame:
     # is exactly the old ``pa.id < pb.id`` condition on the same
     # collisions, per token, filters included. Prefix tokens are the
     # RAREST tokens of each doc, so buckets are small by construction; a
-    # hot token is chunked by the r18 ``bucket_pair_rows`` guard, and the
-    # two-step explode keeps per-row memory O(min(bucket, cap)).
+    # hot token is split across tasks by the r18 ``bucket_pair_rows``
+    # guard. Per-row memory stays O(bucket): every exploded left row
+    # carries the whole member array for its tail slice.
     tau = F.lit(float(threshold))
     pbuckets = (
         prefixes.groupBy("h")

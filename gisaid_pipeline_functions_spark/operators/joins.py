@@ -146,9 +146,11 @@ def edit_distance_one_pairs(df: DataFrame, col: str) -> DataFrame:
     contributes each ``v`` at most once), and ``array_sort`` uses the
     same binary string ordering as the old ``va.s < vb.s`` predicate, so
     (ss[i], ss[j]) for i < j is exactly the old pair multiset, verify
-    included. The two-step explode keeps per-row memory
-    O(min(bucket, cap)); a degenerate hot variant is chunked by the r18
-    ``bucket_pair_rows`` guard (see its docstring in operators/dedup.py).
+    included. Per-row memory is O(bucket): every exploded left row
+    carries the bucket's whole sorted array for its tail slice. A
+    degenerate hot variant is split across tasks by the r18
+    ``bucket_pair_rows`` guard (see its docstring in operators/dedup.py),
+    which bounds the left elements per task, not the row width.
     """
     names = df.select(F.col(col).cast("string").alias("s")).distinct()
     s = F.col("s")

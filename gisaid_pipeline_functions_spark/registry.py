@@ -63,7 +63,7 @@ def register(name: str, sql: str | None = None):
 # the round the change was made in — forced to the front until a green
 # driver row from that round (or later) exists, then they rotate back
 # into the normal staleness order automatically.
-_RECHECK_ROUND = 18
+_RECHECK_ROUND = 19
 # Membership rule (stated once per ADVICE r16 #2, superseding the r14
 # any-change precedent): a query enters _RECHECK_FIRST when its
 # IMPLEMENTATION changes — its own function body, its oracle SQL, or any
@@ -174,20 +174,27 @@ _RECHECK_ROUND = 18
 #   the VERDICT r17 #3 bookkeeping fix — it transits the r17 batch-3c
 #   prefix rewrite and was missing from the r17 cohort),
 #   join_edit_distance_fuzzy, dedup_mllib_minhash.
+#
+# r19 cohort: the r18 batch-B names above were all driver-green in
+# CORRECTNESS_r18 and rotate out on their own. The members are every
+# query transiting operators/topk.py `_with_approx_range_bucket`, whose
+# cut points moved from an eager approxQuantile job into the plan in
+# r18 (cea52af) with no recheck row: the registered callers of
+# paginate, global_rank, block_cumsum, skyline_2d and
+# select_to_token_budget (no operator calls them).
 _RECHECK_FIRST = frozenset(
     {
-        "dedup_prefix_filter_join",
-        "dedup_minhash_lsh",
-        "dedup_ngram_jaccard",
-        "dedup_connected_components",
-        "dedup_cc_large_star",
-        "dedup_near_keep_first",
-        "dedup_cluster_keep_first",
-        "dedup_containment",
-        "dedup_cluster_size_histogram",
-        "dedup_lsh_pr_eval",
-        "join_edit_distance_fuzzy",
-        "dedup_mllib_minhash",
+        "topk_pagination",
+        "topk_skyline",
+        "agg_gini_concentration",
+        "agg_mann_whitney",
+        "agg_ks_test",
+        "agg_spearman_rho",
+        "agg_trimmed_mean",
+        "agg_abc_analysis",
+        "sample_token_budget",
+        "sample_curriculum_order",
+        "multimodal_byte_budget",
     }
 )
 

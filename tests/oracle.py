@@ -16,6 +16,10 @@ import duckdb
 from gisaid_pipeline_functions_spark.sources.tables import TESTDATA_TABLES
 
 FLOAT_DECIMALS = 6
+ROW_FIELDS = (
+    "rows_match", "schema_match", "hash_match", "spark_rows", "oracle_rows",
+    "err",
+)
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -54,6 +58,41 @@ def _rowset(cols, rows):
         (tuple(_norm(row[i]) for i in idx) for row in rows),
         key=lambda t: tuple((x is None, str(x)) for x in t),
     )
+
+
+def correctness_row(spark, con, sf_dir: str, query, sql: str | None) -> dict:
+    """One CORRECTNESS_r*.json row for ``query(spark, sf_dir)`` against
+    the DuckDB oracle ``sql``:
+
+        {rows_match, schema_match, hash_match, spark_rows, oracle_rows, err}
+
+    A query with no oracle (``sql`` None) records err="no_oracle" with the
+    compare fields null, the driver's weaker rows-only gate. Any exception
+    is recorded in ``err``, never raised: a drive reports, it does not die.
+    """
+    row = dict.fromkeys(ROW_FIELDS)
+    try:
+        df = query(spark, sf_dir)
+        s_cols = df.columns
+        s_rows = [tuple(r) for r in df.collect()]
+        row["spark_rows"] = len(s_rows)
+        if sql is None:
+            row["err"] = "no_oracle"
+            return row
+        rel = con.execute(sql)
+        d_cols = [d[0] for d in rel.description]
+        d_rows = rel.fetchall()
+        row["oracle_rows"] = len(d_rows)
+        row["rows_match"] = len(s_rows) == len(d_rows)
+        row["schema_match"] = sorted(s_cols) == sorted(d_cols)
+        row["hash_match"] = (
+            row["rows_match"]
+            and row["schema_match"]
+            and _rowset(s_cols, s_rows) == _rowset(d_cols, d_rows)
+        )
+    except Exception as ex:  # noqa: BLE001 — recorded in the row
+        row["err"] = str(ex)[:300]
+    return row
 
 
 def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> None:

@@ -27,10 +27,17 @@ from __future__ import annotations
 
 import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+from gisaid_pipeline_functions_spark import registry  # noqa: E402
+from tools.harness import (  # noqa: E402
+    correctness_rounds,
+    drive,
+    is_green,
+    write_rows,
+)
 
 
 def _stratified_sample(registry, n: int) -> list[str]:
@@ -46,7 +53,7 @@ def _stratified_sample(registry, n: int) -> list[str]:
     disjoint from what the driver checks this round — the first 50 names
     in rotation order (the window the driver will consume), PLUS the
     names in the latest EXISTING CORRECTNESS artifact. The latter covers
-    the driver-ran-first case (ADVICE r12): _round_number() derives the
+    the driver-ran-first case (ADVICE r12): harness.round_number() derives the
     round as max(existing)+1, so "this round's" file can never exist by
     that name — but when the driver has already run, its output IS the
     latest existing file and its names have rotated out of the first-50
@@ -56,20 +63,11 @@ def _stratified_sample(registry, n: int) -> list[str]:
     names, which the spotcheck (stalest-first) values least anyway."""
     driver, _ = registry._evidence()
     qs = registry.queries()
-    root = Path(__file__).resolve().parents[1]
     excluded = set(list(qs)[:50])
-    # Sort by the PARSED round, not lexicographically (ADVICE r13): a
-    # zero-padded sort returns r99 as "latest" once rounds hit three
-    # digits and the exclusion set silently targets the wrong round.
-    import re
-
-    latest = sorted(
-        root.glob("CORRECTNESS_r*.json"),
-        key=lambda p: int(re.search(r"r(\d+)$", p.stem).group(1)),
-    )
-    if latest:
+    rounds = correctness_rounds()
+    if rounds:
         try:
-            excluded |= set(json.loads(latest[-1].read_text()))
+            excluded |= set(json.loads(rounds[max(rounds)].read_text()))
         except ValueError:
             pass
     strata: dict[tuple[int, str], list[str]] = {}
@@ -91,21 +89,6 @@ def _stratified_sample(registry, n: int) -> list[str]:
     return picked
 
 
-def _round_number(root: Path) -> int:
-    import os
-    import re
-
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env and env.isdigit():
-        return int(env)
-    rounds = [
-        int(m.group(1))
-        for p in root.glob("CORRECTNESS_r*.json")
-        if (m := re.search(r"r(\d+)$", p.stem))
-    ]
-    return max(rounds, default=0) + 1
-
-
 def main() -> int:
     args = []
     sf_dir = "/root/testdata/sf0.01"
@@ -125,88 +108,14 @@ def main() -> int:
             args.append(a)
         i += 1
 
-    from pyspark.sql import SparkSession
-
-    from gisaid_pipeline_functions_spark import registry
-    from tests.oracle import _rowset, duckdb_conn
-
     if sample_n:
         args = _stratified_sample(registry, sample_n)
         print(f"stratified sample ({sample_n}): {' '.join(args)}")
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .appName("check_queries")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    qs, oracles = registry.queries(), registry.oracle_sql()
-    con = duckdb_conn(sf_dir)
-    failed = []
-    out: dict[str, dict] = {}
-    for name in args:
-        row = {
-            "rows_match": None,
-            "schema_match": None,
-            "hash_match": None,
-            "spark_rows": None,
-            "oracle_rows": None,
-            "err": None,
-        }
-        if name not in qs:
-            print(f"{name}: NOT REGISTERED")
-            row["err"] = "not_registered"
-            out[name] = row
-            failed.append(name)
-            continue
-        t0 = time.time()
-        try:
-            df = qs[name](spark, sf_dir)
-            s_cols = df.columns
-            s_rows = [tuple(r) for r in df.collect()]
-            row["spark_rows"] = len(s_rows)
-            if name in oracles:
-                rel = con.execute(oracles[name])
-                d_cols = [d[0] for d in rel.description]
-                d_rows = rel.fetchall()
-                row["oracle_rows"] = len(d_rows)
-                row["rows_match"] = len(s_rows) == len(d_rows)
-                row["schema_match"] = sorted(s_cols) == sorted(d_cols)
-                row["hash_match"] = (
-                    row["rows_match"]
-                    and row["schema_match"]
-                    and _rowset(s_cols, s_rows) == _rowset(d_cols, d_rows)
-                )
-                verdict = (
-                    "hash-green" if row["hash_match"] else "HASH-MISMATCH"
-                )
-                if not row["hash_match"]:
-                    failed.append(name)
-            else:
-                row["err"] = "no_oracle"
-                verdict = f"rows-only ({row['spark_rows']} rows)"
-            print(f"{name}: {verdict}  [{time.time() - t0:.1f}s]")
-        except Exception as e:  # noqa: BLE001
-            row["err"] = str(e)[:300]
-            print(f"{name}: FAIL [{time.time() - t0:.1f}s] {e}")
-            failed.append(name)
-        out[name] = row
-        spark.catalog.clearCache()
-
+    out = drive(args, sf_dir, cpus=16)
     if sample_n:
-        root = Path(__file__).resolve().parents[1]
-        path = root / f"SPOTCHECK_r{_round_number(root):02d}.json"
-        path.write_text(json.dumps(out, indent=1))
-        greens = sum(
-            1
-            for r in out.values()
-            if r["hash_match"] or r["err"] == "no_oracle"
-        )
-        print(f"wrote {path}: {greens}/{len(out)} green")
-    return 1 if failed else 0
+        write_rows("SPOTCHECK", out)
+    return 0 if all(map(is_green, out.values())) else 1
 
 
 if __name__ == "__main__":

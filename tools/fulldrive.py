@@ -1,13 +1,11 @@
 """Full-registry contract drive → FULLDRIVE_r<N>.json (VERDICT r7 #1/#2).
 
-The driver's per-round CORRECTNESS window caps at ~50 of the 203
-registered queries, so evidence for the rest ages. Every round already
-ends with a builder-run full drive — but until r8 its output was a
-prose sentence in COVERAGE.md that judges had to re-derive by
-spot-check. This tool runs EVERY registered query against its DuckDB
-oracle at sf0.01 (the driver's scale, not the sf0.001 pytest scale —
-bugs like the 1 µs timestamp drift have only reproduced at sf0.01) and
-persists the result in the exact CORRECTNESS_r*.json schema:
+The driver's per-round CORRECTNESS window caps at ~50 of the 337
+registered queries, so evidence for the rest ages. This tool runs EVERY
+registered query against its DuckDB oracle at sf0.01 (the driver's
+scale, not the sf0.001 pytest scale — bugs like the 1 µs timestamp drift
+have only reproduced at sf0.01) and persists the result in the exact
+CORRECTNESS_r*.json schema:
 
     {name: {rows_match, schema_match, hash_match,
             spark_rows, oracle_rows, err}}
@@ -24,107 +22,19 @@ Usage:  python tools/fulldrive.py [sf_dir] [cpus]
 
 from __future__ import annotations
 
-import json
 import os
-import re
 import sys
-import time
-from pathlib import Path
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _round_number(root: Path) -> int:
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env and env.isdigit():
-        return int(env)
-    rounds = [
-        int(m.group(1))
-        for p in root.glob("CORRECTNESS_r*.json")
-        if (m := re.search(r"r(\d+)$", p.stem))
-    ]
-    latest = max(rounds, default=0)
-    # CORRECTNESS_r<N> lands at the START of round N's judging; a full
-    # drive run DURING round N+1's build (the normal case) must stamp
-    # N+1. Unlike the sweep there is no same-round artifact to protect:
-    # re-running overwrites this round's drive, which is what you want.
-    return latest + 1
+from gisaid_pipeline_functions_spark import registry  # noqa: E402
+from tools.harness import drive, write_rows  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     cpus = int(sys.argv[2]) if len(sys.argv) > 2 else 16
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    from gisaid_pipeline_functions_spark import registry
-    from tests.oracle import _rowset, duckdb_conn
-
-    qs = registry.queries()
-    oracles = registry.oracle_sql()
-    con = duckdb_conn(sf_dir)
-
-    out: dict[str, dict] = {}
-    t_start = time.time()
-    for i, name in enumerate(sorted(qs), 1):
-        row = {
-            "rows_match": None,
-            "schema_match": None,
-            "hash_match": None,
-            "spark_rows": None,
-            "oracle_rows": None,
-            "err": None,
-        }
-        try:
-            df = qs[name](spark, sf_dir)
-            s_cols = df.columns
-            s_rows = [tuple(r) for r in df.collect()]
-            row["spark_rows"] = len(s_rows)
-            if name in oracles:
-                rel = con.execute(oracles[name])
-                d_cols = [d[0] for d in rel.description]
-                d_rows = rel.fetchall()
-                row["oracle_rows"] = len(d_rows)
-                row["rows_match"] = len(s_rows) == len(d_rows)
-                row["schema_match"] = sorted(s_cols) == sorted(d_cols)
-                row["hash_match"] = (
-                    row["rows_match"]
-                    and row["schema_match"]
-                    and _rowset(s_cols, s_rows) == _rowset(d_cols, d_rows)
-                )
-            else:
-                row["err"] = "no_oracle"
-        except Exception as ex:  # noqa: BLE001 — a drive reports, never dies
-            row["err"] = str(ex)[:300]
-        out[name] = row
-        status = (
-            "green"
-            if row["hash_match"] or row["err"] == "no_oracle"
-            else f"FAIL {row['err'] or 'hash'}"
-        )
-        print(f"[{i}/{len(qs)}] {name}: {status}", flush=True)
-        spark.catalog.clearCache()
-
-    root = Path(__file__).resolve().parents[1]
-    rnd = _round_number(root)
-    path = root / f"FULLDRIVE_r{rnd:02d}.json"
-    path.write_text(json.dumps(out, indent=1))
-    greens = sum(
-        1 for r in out.values() if r["hash_match"] or r["err"] == "no_oracle"
-    )
-    print(
-        f"wrote {path}: {greens}/{len(out)} green "
-        f"in {time.time() - t_start:.0f}s"
-    )
-    con.close()
-    spark.stop()
+    write_rows("FULLDRIVE", drive(sorted(registry.queries()), sf_dir, cpus))
 
 
 if __name__ == "__main__":

@@ -30,27 +30,21 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from gisaid_pipeline_functions_spark.session import get_spark  # noqa: E402
+
 
 def main() -> None:
     n_hot = int(sys.argv[1]) if len(sys.argv) > 1 else 12_000
     cap = int(sys.argv[2]) if len(sys.argv) > 2 else 800
     cpus = int(sys.argv[3]) if len(sys.argv) > 3 else 16
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        # first run at the 1g default: the UNGATED arm died with a heap
-        # OOM at n=12000 (one task materializing the quadratic expansion
-        # of a single bucket row) while the guarded arm completed — the
-        # failure mode the guard exists for. 4g (the scale_probe heap)
-        # lets both arms finish so the timing ratio is measurable.
-        .config("spark.driver.memory", "4g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # the bench session (8 GiB heap). At Spark's 1 GiB default the
+    # UNGATED arm died with a heap OOM at n=12000 (one task materializing
+    # the quadratic expansion of a single bucket row) while the guarded
+    # arm completed — the failure mode the guard exists for.
+    spark = get_spark("gisaid-pipeline-hot-bucket-probe", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     from gisaid_pipeline_functions_spark.operators.dedup import bucket_pair_rows
 

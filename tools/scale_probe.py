@@ -22,26 +22,22 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from gisaid_pipeline_functions_spark.session import get_spark  # noqa: E402
+from tools.harness import time_noop  # noqa: E402
+
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     cpus = int(sys.argv[3]) if len(sys.argv) > 3 else 16
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        # the probe holds TWO localCheckpointed corpora (1x and Nx, plus
-        # the disjoint-vocab pair) in block storage while timing — give
-        # the single local JVM a real heap so storage pressure doesn't
-        # masquerade as an operator OOM; the RATIO is the signal
-        .config("spark.driver.memory", "4g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # the bench session: its 8 GiB heap holds the TWO localCheckpointed
+    # corpora (1x and Nx, plus the disjoint-vocab pair) in block storage
+    # while timing, so storage pressure doesn't masquerade as an operator
+    # OOM; the RATIO is the signal
+    spark = get_spark("gisaid-pipeline-scale-probe", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     from gisaid_pipeline_functions_spark.sources.tables import load_table
 
@@ -170,12 +166,7 @@ def main() -> None:
     }
 
     def timed(fn, d) -> float:
-        best = float("inf")
-        for _ in range(2):
-            t = time.perf_counter()
-            fn(d).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t)
-        return best
+        return time_noop(lambda: fn(d)).total_s
 
     print(f"{'operator':22s} {'1x':>8s} {f'{n}x':>8s} {'ratio':>7s}  (linear = {n}.0)")
     for name, fn in ops.items():
@@ -1215,7 +1206,9 @@ def main() -> None:
         pv = cents.groupBy("v").agg(
             F.sum("g1").alias("n1v"), F.sum(1 - F.col("g1")).alias("n2v")
         )
-        cum = block_cumsum(pv, "v", ["n1v", "n2v"])
+        # inline_cuts=False, as agg_ks_test passes: the probe times the
+        # plan the registered query runs
+        cum = block_cumsum(pv, "v", ["n1v", "n2v"], inline_cuts=False)
         tot = pv.agg(F.sum("n1v").alias("n1"), F.sum("n2v").alias("n2"))
         d = cum.crossJoin(F.broadcast(tot)).select(
             "v",
@@ -1258,7 +1251,8 @@ def main() -> None:
 
         def midrank_map(col):
             hist = rows_q.groupBy(col).agg(F.count(F.lit(1)).alias("cnt"))
-            cum = block_cumsum(hist, col, ["cnt"])
+            # inline_cuts=False, as agg_spearman_rho passes
+            cum = block_cumsum(hist, col, ["cnt"], inline_cuts=False)
             return cum.select(
                 col,
                 (2 * F.col("cum_cnt") - F.col("cnt") + 1).alias(f"r{col}2"),

@@ -11,11 +11,9 @@ threshold; fixed to 3.9s.
 
 Results also persist to SWEEP_r<N>.json at the repo root (VERDICT r5
 next-round #4) so per-query wall history exists for ALL queries, not
-just the bench headliners — the round is read from $SPARK_GRAFT_ROUND,
-else inferred from CORRECTNESS_r*.json: the latest correctness round N
-if SWEEP_r<N> doesn't exist yet, N+1 otherwise (a re-run during the
-same round overwrites nothing and a post-correctness sweep stays in
-its own round — ADVICE r6). The JSON carries the same calibration op
+just the bench headliners — the round comes from
+tools/harness.py:round_number ($SPARK_GRAFT_ROUND, else the latest
+CORRECTNESS round + 1). The JSON carries the same calibration op
 as bench.py so cross-round comparisons can normalize for machine load,
 and each query row records `delta_vs_prev`: its wall seconds minus the
 previous sweep's (calibration-scaled) number.
@@ -28,77 +26,48 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
-from pathlib import Path
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from gisaid_pipeline_functions_spark import registry  # noqa: E402
+from gisaid_pipeline_functions_spark.session import get_spark  # noqa: E402
+from tools.harness import ROOT, calibrate, round_number, time_noop  # noqa: E402
 
-def _round_number(root: Path) -> int:
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env and env.isdigit():
-        return int(env)
-    rounds = [
-        int(m.group(1))
-        for p in root.glob("CORRECTNESS_r*.json")
-        if (m := re.search(r"r(\d+)$", p.stem))
-    ]
-    latest = max(rounds, default=0)
-    # CORRECTNESS_r<N> lands at the START of round N's judging; a sweep
-    # during round N+1's build (the normal case — same rule as
-    # tools/fulldrive.py) must stamp N+1. The old "reuse N while
-    # SWEEP_r<N> is missing" heuristic (ADVICE r6) misfires after a
-    # builder-less round: r11 shipped no sweep, so the r12 build's sweep
-    # stamped r11 and had to be renamed by hand. A sweep re-run in the
-    # same round overwrites its own artifact, which is what you want;
-    # a sweep for a PAST round needs the env var.
-    return latest + 1
+# Timing semantics tag: r7-r18 sweeps ran "noop_write" in a session of
+# their own (shuffle partitions = cpus, Spark's 1 GiB default heap); from
+# r19 the sweep takes the bench session (get_spark: shuffle partitions
+# max(cpus, 32), 8 GiB heap). Deltas are computed only against a prior
+# sweep with the same tag.
+MEASURE = "noop_write_get_spark"
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     cpus = int(sys.argv[2]) if len(sys.argv) > 2 else 16
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    from gisaid_pipeline_functions_spark import registry
+    spark = get_spark("gisaid-pipeline-sweep", cpus=cpus)
 
     # same machine-load fingerprint as bench.py (scaled to the sweep's
     # default 16 cores), so SWEEP_r*.json rows are comparable across VMs
     load1 = os.getloadavg()[0] if hasattr(os, "getloadavg") else None
-    t0 = time.time()
-    spark.range(0, 10_000_000, 1, cpus).selectExpr(
-        "id % 1000 AS k", "id AS v"
-    ).groupBy("k").sum("v").write.format("noop").mode("overwrite").save()
-    calibration_sec = round(time.time() - t0, 3)
+    calibration_sec = calibrate(spark, 10_000_000, cpus)
 
     qs = registry.queries()
     times: dict[str, tuple[float, object]] = {}
     for name in sorted(qs):
-        t = time.time()
+        t = time.perf_counter()
         try:
-            # noop write, NOT count(): count() lets Spark prune every
-            # unreferenced column, so a query whose cost lives in a
-            # map-side computed column times 5-10× too fast (r7 finding:
-            # dedup_span_surgery 0.2 s by count vs 2.3 s end-to-end —
-            # the whole bench-vs-sweep discrepancy VERDICT r6 flagged).
-            # The noop sink matches bench.py's measurement semantics.
-            # Rows still come from a count afterwards — cheap, since the
-            # plan is warm and pruned.
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = round(time.time() - t, 3)
-            times[name] = (dt, df.count())
+            # single-shot build + noop write (time_noop never count()s).
+            # Rows come from a count afterwards — cheap, since the plan
+            # is warm and pruned.
+            tm = time_noop(lambda: qs[name](spark, sf_dir), reps=1)
+            times[name] = (round(tm.total_s, 3), tm.df.count())
         except Exception as ex:  # noqa: BLE001 — a sweep reports, never dies
-            times[name] = (round(time.time() - t, 3), f"ERR {str(ex)[:120]}")
+            times[name] = (
+                round(time.perf_counter() - t, 3), f"ERR {str(ex)[:120]}"
+            )
         # several operators persist() intermediates they can never safely
         # unpersist (lazy returns: triangle counts, phash LSH, cluster
         # histogram — see operators/graph.py docstring); across a
@@ -107,34 +76,33 @@ def main() -> None:
         # everything between them (ADVICE r6).
         spark.catalog.clearCache()
 
-    root = Path(__file__).resolve().parents[1]
-    rnd = _round_number(root)
+    rnd = round_number()
 
     # per-query delta vs the previous round's sweep, normalized by the
     # calibration ratio so a slower VM doesn't read as a regression
     # (VERDICT r6 next-round #8) — printed inline, slowest-first
     prev, prev_cal = {}, None
     for r in range(rnd - 1, 0, -1):
-        p = root / f"SWEEP_r{r:02d}.json"
+        p = ROOT / f"SWEEP_r{r:02d}.json"
         if p.exists():
             try:
                 pj = json.loads(p.read_text())
                 # suppress deltas entirely when the prior sweep's
-                # measurement semantics differ (r5/r6 used count(),
-                # which column-prunes computed columns — a delta against
-                # those mixes a one-time semantic shift into every
-                # map-side-heavy query and reads as a fake regression;
-                # VERDICT r7 wrong #1)
-                if pj.get("measure") == "noop_write":
+                # measurement semantics differ (r5/r6 used count(), which
+                # column-prunes computed columns; r7-r18 ran another
+                # session config) — a delta against those mixes a
+                # one-time semantic shift into every query and reads as
+                # a fake regression (VERDICT r7 wrong #1)
+                if pj.get("measure") == MEASURE:
                     prev = {
                         k: v["sec"] for k, v in pj.get("queries", {}).items()
                     }
                     prev_cal = pj.get("calibration_sec")
                 else:
                     print(
-                        f"note: SWEEP_r{r:02d} used count() semantics — "
-                        "deltas suppressed (would mix the count→noop "
-                        "shift into every map-side-heavy query)"
+                        f"note: SWEEP_r{r:02d} measure="
+                        f"{pj.get('measure')!r} differs from {MEASURE!r} "
+                        "— deltas suppressed"
                     )
             except (OSError, ValueError):
                 pass
@@ -162,17 +130,13 @@ def main() -> None:
         dv = f"{d:+8.3f}s" if d is not None else "     new"
         print(f"{dt:8.3f}s  {dv}  {name}  rows={n}")
 
-    out = root / f"SWEEP_r{rnd:02d}.json"
+    out = ROOT / f"SWEEP_r{rnd:02d}.json"
     out.write_text(
         json.dumps(
             {
                 "sf_dir": sf_dir,
                 "cpus": cpus,
-                # r7+: full-materialization (noop write) timings; r5/r6
-                # sweeps used count(), which column-prunes — deltas vs
-                # r6 therefore carry a one-time semantic shift for
-                # queries with expensive computed columns
-                "measure": "noop_write",
+                "measure": MEASURE,
                 "loadavg_1m": load1,
                 "calibration_sec": calibration_sec,
                 "pinned_idle_calibration": PINNED_IDLE_CALIBRATION,

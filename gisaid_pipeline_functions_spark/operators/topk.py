@@ -18,108 +18,87 @@ def top_k(df: DataFrame, order_cols: list, k: int) -> DataFrame:
     return df.orderBy(*order_cols).limit(k)
 
 
-def _with_approx_range_bucket(
+def _sum0(c):
+    return F.coalesce(F.sum(c), F.lit(0))
+
+
+def _block_prefix(
     df: DataFrame,
     order_col: str,
-    n: int,
+    num_buckets: int | None,
+    totals: dict,
     descending: bool = False,
-    null_bucket: str = "min",
-    inline_cuts: bool = True,
+    fold=_sum0,
 ) -> DataFrame:
-    """Order-respecting range-bucket ids (`_bkt`) from ~n approximate
-    quantile cuts, computed INLINE as a one-row ``percentile_approx``
-    aggregate broadcast back onto the rows — r18 (guide §2.4), replacing
-    the former EAGER ``df.stat.approxQuantile`` driver job shared by the
-    block-prefix family (paginate / global_rank / block_cumsum /
-    skyline_2d / budget_pack_walk).
+    """The block-prefix core of paginate, global_rank, block_cumsum,
+    skyline_2d and training.select_to_token_budget: a GLOBAL walk in
+    ``order_col`` order made scale-safe (an unpartitioned window moves
+    the whole table to one partition — VERDICT r3 #3), the trick of the
+    FASTA reader (sources/fasta.py:82).
 
-    Why: the eager quantile job evaluated the caller's whole input
-    subtree once for the cuts and the main plan evaluated it AGAIN —
-    cross-job exchange reuse does not exist — so every consumer paid a
-    double subtree scan (~23 registered queries transit this family).
-    The inline aggregate consumes the SAME exchange the main plan uses
-    (runtime ReusedExchange), so the subtree is evaluated once; the cuts
-    cross the plan as a single broadcast row.
+    Returns ``df`` plus ``_bkt``, an order-respecting range bucket of
+    ``order_col``, and for each ``totals`` name (a per-bucket aggregate
+    Column) the ``fold`` of that total over every bucket that PRECEDES
+    the row's bucket in the walk: the lower buckets ascending, the higher
+    ones ``descending``. The default fold is a sum that reads 0 when no
+    bucket precedes. The caller finishes the walk with a window
+    partitioned by ``_bkt``, so every bucket ranks or sums in parallel.
 
-    Correctness is unchanged because every consumer's OUTPUT is
-    cut-independent: each composes exact per-bucket totals (the
-    triangular broadcast prefix) with a within-bucket window over a
-    total order, so ANY order-respecting bucketing yields the same rank/
-    cumsum/page/frontier. Cuts only steer balance. Determinism under
-    recomputation also holds: ``percentile_approx`` is a deterministic
-    aggregate of the data (unlike repartitionByRange's per-branch
-    sampling, the trap the old literal cuts existed to avoid), and the
-    broadcast is computed once per execution.
+    ~num_buckets-1 cuts come from a one-row ``percentile_approx``. A
+    row's bucket is the number of cuts strictly below its key, a
+    compiled comparison chain: ties share a bucket and bucket order
+    refines key order, so any cuts give the same output and only steer
+    bucket balance. NULL keys take bucket -1, first ascending and last
+    descending (Spark's default null order). One aggregate over the
+    <=num_buckets+1 per-bucket totals builds a dense prefix array per
+    total, and the cuts and the arrays return to the rows as ONE
+    broadcast row: the per-bucket aggregate carries the cuts as a
+    grouping key, so the bucket a row is counted in and the bucket it
+    reads its prefix from come from the same single evaluation of the
+    cuts, whether or not Spark reuses exchanges at runtime.
 
-    ``null_bucket``: "min" -> NULL order keys get bucket -1 (ASC NULLS
-    FIRST globally — paginate/global_rank/block_cumsum); "last" -> NULL
-    keys get bucket size(cuts) (DESC NULLS LAST — budget_pack_walk);
-    "null" -> NULL propagates (skyline_2d joins drop NULL-x rows, as the
-    old raw bucket expression did). Non-numeric or n<=1 degrades to one
-    bucket exactly as the old ``except`` path did.
-
-    ``inline_cuts=False`` keeps the r17 eager approxQuantile + literal
-    comparison-chain path. Measured reason for the escape (r18): the
-    runtime-array bucket expression is an INTERPRETED higher-order
-    lambda (~n comparisons per row per consumer branch; the r9
-    interpreted-HOF cost class), while literal cuts compile into a
-    codegen'd chain. For block_cumsum inputs that are near-unique
-    per-value histograms consumed twice (agg_spearman_rho: two ~200k-row
-    histograms), the lambda + broadcast barrier cost MORE than the
-    removed second subtree evaluation at local scale — three-arm
-    isolation: literal-chain 3.50 s, eager+HOF 4.18 s, inline 4.72 s
-    interleaved min-of-3. The cost model that emerged from the measured
-    set: inline wins when the bucketed frame is materially SMALLER than
-    its subtree's work (a real aggregation reduction — the saved second
-    subtree evaluation dominates); it loses when the frame is the
-    un-reduced input or a near-unique histogram (the per-row HOF cost
-    ~ the whole saved job). Measured consumers: inline shipped for
-    topk_skyline 0.44x, multimodal_byte_budget 0.61x,
-    sample_token_budget 0.72x, agg_gini 0.73x,
-    sample_curriculum_order 0.76x, topk_pagination 0.81x,
-    agg_abc 0.81x, agg_mann_whitney ~1.00x; eager kept for
-    agg_spearman_rho (above), agg_trimmed_mean (1.45 -> 1.74 s inline)
-    and agg_ks_test (1.05-1.09x across four A/Bs).
+    Non-numeric keys (``percentile_approx`` is numeric-only) and
+    num_buckets <= 1 use one bucket.
     """
     from pyspark.sql.types import NumericType
 
+    n = num_buckets or df.sparkSession.sparkContext.defaultParallelism
     numeric = isinstance(df.schema[order_col].dataType, NumericType)
-    if n <= 1 or not numeric:
-        b = F.lit(0)
-        if null_bucket == "null":
-            b = F.when(F.col(order_col).isNull(), F.lit(None).cast("int")).otherwise(b)
-        return df.withColumn("_bkt", b)
+    ncuts = n - 1 if numeric else 0
     v = F.col(order_col)
-    if not inline_cuts:
-        qs = [i / n for i in range(1, n)]
-        lits = sorted(set(df.stat.approxQuantile(order_col, qs, 0.001)))
-        bucket = F.lit(0)
-        for c in lits:
-            bucket = bucket + ((v < F.lit(c)) if descending else (v > F.lit(c))).cast("int")
-        if null_bucket == "min":
-            b = F.coalesce(bucket, F.lit(-1))
-        elif null_bucket == "last":
-            b = F.coalesce(bucket, F.lit(len(lits)))
-        else:
-            b = bucket
-        return df.withColumn("_bkt", b)
-    qs = F.array(*[F.lit(i / n) for i in range(1, n)])
-    # accuracy 1000 = the old approxQuantile's relativeError 0.001 (the
-    # percentile_approx DEFAULT, 10000, builds a 10x finer GK summary)
-    cuts = df.select(order_col).agg(
-        F.percentile_approx(order_col, qs, F.lit(1000)).alias("_cuts")
+    hits = sum(
+        ((v > F.element_at("_cuts", i)).cast("int") for i in range(1, ncuts + 1)),
+        F.lit(0),
     )
-    parts = df.crossJoin(F.broadcast(cuts))
-    cnt = F.size(
-        F.filter(F.col("_cuts"), (lambda c: v < c) if descending else (lambda c: v > c))
-    ).cast("int")
-    if null_bucket == "min":
-        b = F.when(v.isNull(), F.lit(-1)).otherwise(cnt)
-    elif null_bucket == "last":
-        b = F.when(v.isNull(), F.size(F.col("_cuts")).cast("int")).otherwise(cnt)
-    else:
-        b = F.when(v.isNull(), F.lit(None).cast("int")).otherwise(cnt)
-    return parts.withColumn("_bkt", b).drop("_cuts")
+    bkt = F.coalesce(hits, F.lit(-1))
+    keys, rows = [], df
+    if ncuts:
+        qs = F.array(*[F.lit(i / n) for i in range(1, n)])
+        # accuracy 1000 = relative error 0.001 (the percentile_approx
+        # default, 10000, builds a 10x finer GK summary)
+        cuts = df.agg(F.percentile_approx(v, qs, F.lit(1000)).alias("_cuts"))
+        keys, rows = ["_cuts"], df.crossJoin(F.broadcast(cuts))
+    per = rows.groupBy(*keys, bkt.alias("_bkt")).agg(
+        *[t.alias(k) for k, t in totals.items()]
+    )
+    b = F.col("_bkt")
+    prefix_row = per.groupBy(*keys).agg(
+        *[
+            F.array(
+                *[
+                    fold(F.when((b > i) if descending else (b < i), F.col(k)))
+                    for i in range(-1, ncuts + 1)
+                ]
+            ).alias(k)
+            for k in totals
+        ]
+    )
+    return (
+        df.crossJoin(F.broadcast(prefix_row))
+        .withColumn("_bkt", bkt)
+        .withColumns({k: F.element_at(k, b + 2) for k in totals})
+        .drop(*keys)
+    )
 
 
 def paginate(
@@ -128,46 +107,18 @@ def paginate(
     """O6 — fixed-size row pages (Plotting_Functions.py:1059–1073):
     global row rank over the page ordering, ``floor((rank-1)/page_size)``.
 
-    Scale-safe global ranking (an unpartitioned ``row_number`` window
-    moves the WHOLE table to one partition — VERDICT r3 #3): the same
-    block-prefix trick as the FASTA reader (sources/fasta.py:82) —
-    1. ~B approximate range cut points, computed INLINE as a broadcast
-       ``percentile_approx`` row (r18 — see ``_with_approx_range_bucket``:
-       deterministic under recomputation, unlike repartitionByRange's
-       per-branch sampling, and the input subtree is no longer evaluated
-       a second time by an eager quantile job);
-    2. per-bucket row counts → prefix offsets via a triangular join over
-       the B-row counts table (broadcast; no unpartitioned window);
-    3. global rank = bucket prefix + partition-LOCAL ``row_number``
-       (a partitioned window — each bucket ranks in parallel).
-
-    Falls back to a single bucket for non-numeric order columns
-    (percentile_approx is numeric-only); callers paginating big
-    string-keyed tables should pre-map the key to a numeric rank.
-
-    NULL order keys get bucket -1 (no bucket sorts below -1, so its
-    prefix is 0 and NULL rows rank first globally — Spark's ASC NULLS
-    FIRST; a raw NULL bucket would be dropped by the _bkt equi-join).
+    The global rank is ``_block_prefix``'s row count over the lower
+    buckets plus a ``row_number`` window partitioned by bucket; one
+    evaluation of the cut points feeds both a row's bucket and its
+    prefix. NULL order keys rank first (ASC NULLS FIRST). A non-numeric
+    order column gets one bucket; callers paginating big string-keyed
+    tables should pre-map the key to a numeric rank.
     """
-    spark = df.sparkSession
-    n = num_buckets or spark.sparkContext.defaultParallelism
-    parts = _with_approx_range_bucket(df, order_col, n, null_bucket="min")
-    counts = parts.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_cnt"))
-    prefixes = (
-        counts.alias("a")
-        .join(counts.alias("b"), F.col("b._bkt") < F.col("a._bkt"), "left")
-        .groupBy(F.col("a._bkt").alias("_bkt"))
-        .agg(F.coalesce(F.sum("b._cnt"), F.lit(0)).alias("_prefix"))
-    )
+    parts = _block_prefix(df, order_col, num_buckets, {"_prefix": F.count(F.lit(1))})
     local_rn = F.row_number().over(Window.partitionBy("_bkt").orderBy(order_col))
-    return (
-        parts.join(F.broadcast(prefixes), "_bkt")
-        .withColumn(
-            "page",
-            F.floor((F.col("_prefix") + local_rn - 1) / page_size).cast("int"),
-        )
-        .drop("_bkt", "_prefix")
-    )
+    return parts.withColumn(
+        "page", F.floor((F.col("_prefix") + local_rn - 1) / page_size).cast("int")
+    ).drop("_bkt", "_prefix")
 
 
 def global_rank(
@@ -175,43 +126,21 @@ def global_rank(
     order_col: str,
     tiebreak_col: str,
     num_buckets: int | None = None,
-    inline_cuts: bool = True,
 ) -> DataFrame:
-    """Scale-safe GLOBAL row rank under the (order_col, tiebreak_col)
-    total order — ``paginate``'s block-prefix trick (tiny literal cut
-    points → per-bucket counts → broadcast triangular prefix →
-    bucket-partitioned row_number + offset) exposed as a rank column,
-    for consumers that need Σf(rank) aggregates (Gini, exact
-    percentile-of-rank) rather than pages. An unpartitioned row_number
-    window would move the whole table to one partition (VERDICT r3 #3).
-
-    Ties on order_col land in one bucket (cuts compare strictly), so the
-    tiebreak column totalizes the order deterministically. r18: cuts are
-    an inline broadcast ``percentile_approx`` row — one subtree
-    evaluation instead of the eager approxQuantile job's two (see
-    ``_with_approx_range_bucket``; ``inline_cuts=False`` keeps the r17
-    eager path, the measured escape for un-reduced raw-row inputs —
-    documented there)."""
-    spark = df.sparkSession
-    n = num_buckets or spark.sparkContext.defaultParallelism
-    parts = _with_approx_range_bucket(
-        df, order_col, n, null_bucket="min", inline_cuts=inline_cuts
-    )
-    counts = parts.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_cnt"))
-    prefixes = (
-        counts.alias("a")
-        .join(counts.alias("b"), F.col("b._bkt") < F.col("a._bkt"), "left")
-        .groupBy(F.col("a._bkt").alias("_bkt"))
-        .agg(F.coalesce(F.sum("b._cnt"), F.lit(0)).alias("_prefix"))
-    )
+    """Scale-safe GLOBAL row rank (``rank``, LongType) under the
+    (order_col, tiebreak_col) total order — ``paginate``'s walk exposed
+    as a rank column, for consumers that need Σf(rank) aggregates (Gini,
+    exact percentile-of-rank) rather than pages. One evaluation of the
+    cut points feeds both a row's bucket and its prefix. Ties on
+    order_col share a bucket, so the tiebreak column totalizes the order
+    deterministically; NULL order keys rank first."""
+    parts = _block_prefix(df, order_col, num_buckets, {"_prefix": F.count(F.lit(1))})
     local_rn = F.row_number().over(
         Window.partitionBy("_bkt").orderBy(order_col, tiebreak_col)
     )
-    return (
-        parts.join(F.broadcast(prefixes), "_bkt")
-        .withColumn("rank", (F.col("_prefix") + local_rn).cast("long"))
-        .drop("_bkt", "_prefix")
-    )
+    return parts.withColumn(
+        "rank", (F.col("_prefix") + local_rn).cast("long")
+    ).drop("_bkt", "_prefix")
 
 
 def block_cumsum(
@@ -220,46 +149,22 @@ def block_cumsum(
     value_cols: list[str],
     tiebreak_col: str | None = None,
     num_buckets: int | None = None,
-    inline_cuts: bool = True,
 ) -> DataFrame:
     """Scale-safe GLOBAL running sum of ``value_cols`` under the
-    ``order_col`` total order — ``global_rank``'s block-prefix trick
-    (approx-quantile cut points → per-bucket totals → broadcast
-    triangular prefix → bucket-partitioned window sum + offset)
-    generalized from rank (count) to arbitrary sum columns, for ECDF /
-    KS-statistic consumers. An unpartitioned running-sum window would
-    move the whole table to one partition (the VERDICT r3 #3 rule).
+    ``order_col`` order — ``global_rank``'s walk generalized from a row
+    count to arbitrary sum columns, for ECDF / KS-statistic consumers.
+    One evaluation of the cut points feeds both a row's bucket and its
+    per-bucket prefix sums.
 
     Adds ``cum_<col>`` (LongType) for each value column: the sum of
     that column over all rows ≤ the current row in the
-    (order_col, tiebreak_col) order, INCLUDING the current row. Ties on
-    order_col land in one bucket (cuts compare strictly); pass a
+    (order_col, tiebreak_col) order, INCLUDING the current row; NULL
+    order keys come first. Ties on order_col share a bucket; pass a
     tiebreak for a total order when order_col has duplicates, else the
-    running sum at equal keys is frame-order-dependent. r18: cuts are an
-    inline broadcast ``percentile_approx`` row — one subtree evaluation
-    instead of the eager approxQuantile job's two (see
-    ``_with_approx_range_bucket``; ``inline_cuts=False`` keeps the r17
-    eager path — the measured escape for near-unique histograms consumed
-    by interpreted-HOF bucketing, documented there).
+    running sum at equal keys is frame-order-dependent.
     """
-    spark = df.sparkSession
-    n = num_buckets or spark.sparkContext.defaultParallelism
-    parts = _with_approx_range_bucket(
-        df, order_col, n, null_bucket="min", inline_cuts=inline_cuts
-    )
-    totals = parts.groupBy("_bkt").agg(
-        *[F.sum(c).alias(f"_tot_{c}") for c in value_cols]
-    )
-    prefixes = (
-        totals.alias("a")
-        .join(totals.alias("b"), F.col("b._bkt") < F.col("a._bkt"), "left")
-        .groupBy(F.col("a._bkt").alias("_bkt"))
-        .agg(
-            *[
-                F.coalesce(F.sum(f"b._tot_{c}"), F.lit(0)).alias(f"_pre_{c}")
-                for c in value_cols
-            ]
-        )
+    parts = _block_prefix(
+        df, order_col, num_buckets, {f"_pre_{c}": F.sum(c) for c in value_cols}
     )
     order = [order_col] + ([tiebreak_col] if tiebreak_col else [])
     win = (
@@ -267,13 +172,11 @@ def block_cumsum(
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    out = parts.join(F.broadcast(prefixes), "_bkt")
     for c in value_cols:
-        out = out.withColumn(
-            f"cum_{c}",
-            (F.col(f"_pre_{c}") + F.sum(c).over(win)).cast("long"),
+        parts = parts.withColumn(
+            f"cum_{c}", (F.col(f"_pre_{c}") + F.sum(c).over(win)).cast("long")
         )
-    return out.drop("_bkt", *[f"_pre_{c}" for c in value_cols])
+    return parts.drop("_bkt", *[f"_pre_{c}" for c in value_cols])
 
 
 def skyline_2d(
@@ -285,32 +188,18 @@ def skyline_2d(
     """2-D skyline (Pareto frontier; Borzsony et al., ICDE 2001):
     rows not dominated by any other — maximize ``x_col``, minimize
     ``y_col``, dominance strict in at least one dimension (exact ties
-    on both dims all survive). The 2-D case is sort-based, made
-    scale-safe with the block-prefix trick of ``global_rank``:
-    approx-quantile cuts bucket x, the per-bucket y-minima form a tiny
-    broadcast triangular prefix (min over strictly-HIGHER buckets —
-    bucket cuts compare strictly, so cross-bucket x order is strict),
-    and within a bucket one PARTITIONED window over the distinct-x
-    group rows finishes the running min. A row survives iff its y is
-    the minimum of its x group AND strictly below every higher-x
-    minimum. No global window, no all-pairs join. r18: cuts are an
-    inline broadcast ``percentile_approx`` row — one subtree evaluation
-    instead of the eager approxQuantile job's two (see
-    ``_with_approx_range_bucket``; NULL x propagates a NULL bucket and
-    is dropped by the equi-joins, exactly as the old raw bucket
-    expression behaved)."""
-    spark = df.sparkSession
-    n = num_buckets or spark.sparkContext.defaultParallelism
-    pts = _with_approx_range_bucket(df, x_col, n, null_bucket="null")
-    grp = pts.groupBy("_bkt", x_col).agg(F.min(y_col).alias("_gy"))
-    bmin = grp.groupBy("_bkt").agg(F.min("_gy").alias("_bmin"))
-    hmin = (
-        bmin.alias("a")
-        .join(
-            bmin.alias("b"), F.col("b._bkt") > F.col("a._bkt"), "left"
-        )
-        .groupBy(F.col("a._bkt").alias("_bkt"))
-        .agg(F.min(F.col("b._bmin")).alias("_hmin"))
+    on both dims all survive). Sort-based: a row survives iff its y is
+    the minimum of its x group AND strictly below every higher-x group
+    minimum. The x groups walk ``_block_prefix`` DESCENDING with a min
+    fold (the minimum over strictly-higher buckets; a bucket holds whole
+    x groups, so cross-bucket x order is strict; one evaluation of the
+    cut points feeds both a group's bucket and that minimum), and one
+    window partitioned by bucket finishes the running min. No global
+    window, no all-pairs join. The frontier joins back on ``x_col``
+    alone, so rows with a NULL x never join and are dropped."""
+    grp = df.groupBy(x_col).agg(F.min(y_col).alias("_gy"))
+    pts = _block_prefix(
+        grp, x_col, num_buckets, {"_hmin": F.min("_gy")}, descending=True, fold=F.min
     )
     w = (
         Window.partitionBy("_bkt")
@@ -320,16 +209,12 @@ def skyline_2d(
     # F.least skips NULLs (both engines), so the top bucket's first
     # x group — no higher-x point anywhere — gets NULL and survives
     frontier = (
-        grp.join(F.broadcast(hmin), "_bkt")
-        .withColumn(
-            "_rmin",
-            F.least(F.min("_gy").over(w), F.col("_hmin")),
-        )
+        pts.withColumn("_rmin", F.least(F.min("_gy").over(w), F.col("_hmin")))
         .filter(F.col("_rmin").isNull() | (F.col("_gy") < F.col("_rmin")))
-        .select("_bkt", x_col, "_gy")
+        .select(x_col, "_gy")
     )
     return (
-        pts.join(frontier, ["_bkt", x_col])
+        df.join(frontier, x_col)
         .filter(F.col(y_col) == F.col("_gy"))
-        .drop("_bkt", "_gy")
+        .drop("_gy")
     )

@@ -275,42 +275,23 @@ def select_to_token_budget(
     until the token budget is spent", the final cut of every curated
     training mix.
 
-    The running total over a global ordering is the same shape as
-    pagination's global rank, and gets the same scale-safe plan (the
-    block-prefix trick, operators/topk.py:paginate / sources/fasta.py:82):
-    ~B approximate range cut points of ``order_col`` give range buckets
-    whose order REFINES the global order exactly (bucket(v) counts cuts
-    strictly above v, so every value in bucket b outranks every value in
-    bucket b+1); per-bucket token sums become prefix offsets via a
-    triangular join over the B-row counts table; the cumulative sum
-    inside each bucket is a PARTITIONED window. No single-partition
-    stage anywhere. r18: cuts are an inline broadcast
-    ``percentile_approx`` row — one subtree evaluation instead of the
-    eager approxQuantile job's two, and still deterministic under
-    recomputation (see operators/topk.py:_with_approx_range_bucket).
-
-    NULL order keys go to the LAST bucket (the walk is DESC NULLS LAST;
-    a raw NULL bucket would be dropped by the equi-join below), where
-    the partitioned desc window already orders them after every real
-    value.
+    The running total over a global ordering is pagination's walk
+    (operators/topk.py:_block_prefix) run DESCENDING: every row of a
+    range bucket outranks every row of the next bucket down, the token
+    sums of the higher buckets give the row's prefix, and the cumulative
+    sum inside each bucket is a PARTITIONED window; one evaluation of
+    the cut points feeds both a row's bucket and its prefix. No
+    single-partition stage anywhere. NULL order keys walk LAST (DESC NULLS LAST) and
+    still consume budget when reached.
 
     ``df`` must carry ``budget_col`` (a per-row constant, typically
     crossJoined from a 1-row aggregate). Emits ``cum_tokens`` for
     auditability.
     """
-    from .topk import _with_approx_range_bucket
+    from .topk import _block_prefix
 
-    spark = df.sparkSession
-    n = num_buckets or spark.sparkContext.defaultParallelism
-    parts = _with_approx_range_bucket(
-        df, order_col, n, descending=True, null_bucket="last"
-    )
-    counts = parts.groupBy("_bkt").agg(F.sum(token_col).alias("_tok"))
-    prefixes = (
-        counts.alias("a")
-        .join(counts.alias("b"), F.col("b._bkt") < F.col("a._bkt"), "left")
-        .groupBy(F.col("a._bkt").alias("_bkt"))
-        .agg(F.coalesce(F.sum("b._tok"), F.lit(0)).alias("_prefix"))
+    parts = _block_prefix(
+        df, order_col, num_buckets, {"_prefix": F.sum(token_col)}, descending=True
     )
     w = (
         Window.partitionBy("_bkt")
@@ -318,8 +299,7 @@ def select_to_token_budget(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return (
-        parts.join(F.broadcast(prefixes), "_bkt")
-        .withColumn("cum_tokens", F.col("_prefix") + F.sum(token_col).over(w))
+        parts.withColumn("cum_tokens", F.col("_prefix") + F.sum(token_col).over(w))
         .filter(F.col("cum_tokens") <= F.col(budget_col))
         .drop("_bkt", "_prefix")
     )

@@ -1770,12 +1770,7 @@ def agg_ks_test(spark, sf_dir):
     pv = cents.groupBy("v").agg(
         F.sum("g1").alias("n1v"), F.sum(1 - F.col("g1")).alias("n2v")
     )
-    # inline_cuts=False (r18): pv is a NEAR-UNIQUE per-price histogram
-    # (no reduction vs orders), the agg_spearman_rho shape — the
-    # interpreted-HOF bucket over ~every row x2 branches measured
-    # 1.05-1.09x vs the eager path across four interleaved A/Bs (cost
-    # model in _with_approx_range_bucket's docstring).
-    cum = block_cumsum(pv, "v", ["n1v", "n2v"], inline_cuts=False)
+    cum = block_cumsum(pv, "v", ["n1v", "n2v"])
     tot = pv.agg(F.sum("n1v").alias("n1"), F.sum("n2v").alias("n2"))
     d = cum.crossJoin(F.broadcast(tot)).select(
         "v",
@@ -1783,16 +1778,16 @@ def agg_ks_test(spark, sf_dir):
             F.col("cum_n1v") * F.col("n2") - F.col("cum_n2v") * F.col("n1")
         ).alias("dn"),
     )
-    mx = d.agg(F.max("dn").alias("d_num"))
-    am = (
-        d.join(F.broadcast(mx), d["dn"] == mx["d_num"])
-        .agg(F.min("v").alias("vmax"))
+    # max dn and, among the rows at that max, the smallest v — one
+    # aggregate, so d (and its block_cumsum) has a single consumer
+    top = d.agg(F.max(F.struct("dn", (-F.col("v")).alias("nv"))).alias("t"))
+    mx = top.select(
+        F.col("t.dn").alias("d_num"), (-F.col("t.nv")).alias("vmax")
     )
     n1d, n2d = F.col("n1").cast("double"), F.col("n2").cast("double")
     ks = F.col("d_num").cast("double") / (n1d * n2d)
     return (
         tot.crossJoin(F.broadcast(mx))
-        .crossJoin(F.broadcast(am))
         .select(
             "n1",
             "n2",
@@ -1880,14 +1875,7 @@ def agg_spearman_rho(spark, sf_dir):
 
     def midrank_map(col):
         hist = rows_q.groupBy(col).agg(F.count(F.lit(1)).alias("cnt"))
-        # inline_cuts=False (r18, the third recorded spearman rejection):
-        # both midrank histograms are near-unique (~200k rows) and each
-        # is consumed by two branches, so the runtime-array bucket's
-        # interpreted-HOF lambda + broadcast barrier measured SLOWER
-        # than the eager quantile job it replaces (3.50 -> 4.72 s
-        # interleaved min-of-3; isolation in
-        # operators/topk.py:_with_approx_range_bucket's docstring).
-        cum = block_cumsum(hist, col, ["cnt"], inline_cuts=False)
+        cum = block_cumsum(hist, col, ["cnt"])
         return cum.select(
             col,
             (2 * F.col("cum_cnt") - F.col("cnt") + 1).alias(f"r{col}2"),
@@ -2867,12 +2855,7 @@ def agg_trimmed_mean(spark, sf_dir):
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    # inline_cuts=False (r18): p is the UN-REDUCED orders table, so the
-    # runtime-cuts bucket's interpreted-HOF lambda over every row (x2
-    # consumer branches) costs more than the eager quantile job it
-    # replaces — a bare column scan (interleaved min-of-3: 1.45 -> 1.74 s
-    # inline; the cost model in _with_approx_range_bucket's docstring).
-    ranked = global_rank(p, "cents", "o_orderkey", inline_cuts=False)
+    ranked = global_rank(p, "cents", "o_orderkey")
     nn = p.agg(F.count(F.lit(1)).alias("n")).select(
         "n", F.expr("n * 5 div 100").alias("k")
     )

@@ -177,11 +177,13 @@ _RECHECK_ROUND = 19
 #
 # r19 cohort: the r18 batch-B names above were all driver-green in
 # CORRECTNESS_r18 and rotate out on their own. The members are every
-# query transiting operators/topk.py `_with_approx_range_bucket`, whose
-# cut points moved from an eager approxQuantile job into the plan in
-# r18 (cea52af) with no recheck row: the registered callers of
-# paginate, global_rank, block_cumsum, skyline_2d and
-# select_to_token_budget (no operator calls them).
+# query transiting operators/topk.py `_block_prefix`: the registered
+# callers of paginate, global_rank, block_cumsum, skyline_2d and
+# select_to_token_budget (no operator calls them). Their cut points
+# moved into the plan in r18 (cea52af) with no recheck row, and in r19
+# the five operators moved onto `_block_prefix` (one cuts evaluation
+# per plan, prefixes in one broadcast row, no eager-cuts escape);
+# agg_ks_test also folds its max/argmax into one aggregate.
 _RECHECK_FIRST = frozenset(
     {
         "topk_pagination",

@@ -1,8 +1,9 @@
 """Hypothesis properties for the bucketed block-prefix operators
-(operators/topk.py:paginate, operators/training.py:select_to_token_budget)
-and sliding_chunks: the scale-safe plans must be RESULT-IDENTICAL to the
-naive single-partition definition on arbitrary inputs — duplicates, skew,
-empty-ish frames, boundary-straddling pages all included."""
+(operators/topk.py:paginate / global_rank / block_cumsum,
+operators/training.py:select_to_token_budget) and sliding_chunks: the
+scale-safe plans must be RESULT-IDENTICAL to the naive single-partition
+definition on arbitrary inputs — duplicates, skew, NULL keys, empty-ish
+frames, boundary-straddling pages all included."""
 
 from __future__ import annotations
 
@@ -11,7 +12,11 @@ import math
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from gisaid_pipeline_functions_spark.operators.topk import paginate
+from gisaid_pipeline_functions_spark.operators.topk import (
+    block_cumsum,
+    global_rank,
+    paginate,
+)
 from gisaid_pipeline_functions_spark.operators.training import (
     select_to_token_budget,
     sliding_chunks,
@@ -48,6 +53,53 @@ def test_paginate_matches_global_definition(spark, vals, page_size):
     }
 
 
+# order keys with many ties and NULLs; NULLs sort first ascending
+_KEYS = st.lists(
+    st.one_of(st.none(), st.integers(min_value=-8, max_value=8)),
+    min_size=1,
+    max_size=80,
+)
+
+
+def _asc_nulls_first(rows):
+    # the exact total order (v ASC NULLS FIRST, id ASC); rows are (id, v, ...)
+    return sorted(rows, key=lambda r: (r[1] is not None, r[1] or 0, r[0]))
+
+
+@given(keys=_KEYS)
+@settings(**_SETTINGS)
+def test_global_rank_matches_sorted_definition(spark, keys):
+    rows = [(i, v) for i, v in enumerate(keys)]
+    df = spark.createDataFrame(rows, "id long, v long")
+    out = global_rank(df, "v", "id", num_buckets=4)
+    assert out.schema["rank"].dataType.simpleString() == "bigint"
+    got = {r["id"]: r["rank"] for r in out.collect()}
+    assert got == {r[0]: k for k, r in enumerate(_asc_nulls_first(rows), 1)}
+
+
+@given(
+    keys=_KEYS,
+    vals=st.lists(
+        st.tuples(st.integers(-20, 20), st.integers(0, 1_000)), min_size=80, max_size=80
+    ),
+)
+@settings(**_SETTINGS)
+def test_block_cumsum_matches_running_sum(spark, keys, vals):
+    rows = [(i, v, *vals[i]) for i, v in enumerate(keys)]
+    df = spark.createDataFrame(rows, "id long, v long, a long, b long")
+    out = block_cumsum(df, "v", ["a", "b"], tiebreak_col="id", num_buckets=4)
+    assert [out.schema[c].dataType.simpleString() for c in ("cum_a", "cum_b")] == [
+        "bigint",
+        "bigint",
+    ]
+    got = {r["id"]: (r["cum_a"], r["cum_b"]) for r in out.collect()}
+    expect, ca, cb = {}, 0, 0
+    for i, _, a, b in _asc_nulls_first(rows):
+        ca, cb = ca + a, cb + b
+        expect[i] = (ca, cb)
+    assert got == expect
+
+
 @given(
     rows=st.lists(
         st.tuples(
@@ -82,10 +134,10 @@ def test_token_budget_matches_greedy_walk(spark, rows, frac):
 
 
 def test_paginate_keeps_null_order_keys(spark):
-    # NULL order keys must be paginated, not dropped (the raw bucket
-    # expression is NULL for them and the _bkt equi-join would silently
-    # discard the rows), and must land FIRST — Spark's ASC NULLS FIRST,
-    # the order the pre-bucketed row_number implementation produced.
+    # NULL order keys must be paginated, not dropped (the cut
+    # comparisons are NULL for them, so they need a bucket of their own),
+    # and must land FIRST — Spark's ASC NULLS FIRST, the order the
+    # pre-bucketed row_number implementation produced.
     rows = [(0, None), (1, 5), (2, None), (3, 1), (4, 9), (5, 3)]
     df = spark.createDataFrame(rows, "id long, v long")
     got = paginate(df, "v", 2, num_buckets=3).collect()

@@ -155,6 +155,36 @@ def test_pagination_and_budget_windows_are_partitioned(spark, sf_dir):
                 assert "_bkt" in line, f"{name}: unpartitioned window: {line.strip()[:120]}"
 
 
+def test_block_prefix_cuts_evaluated_once_without_exchange_reuse(spark, sf_dir):
+    # The bucket a row is counted in and the bucket it reads its prefix
+    # from must come from ONE evaluation of the cut points, not from
+    # runtime exchange reuse: with reuse off, each query's final AQE plan
+    # holds exactly one final percentile_approx aggregate, and the
+    # rowsets still equal their oracles.
+    import re
+
+    from tests.oracle import correctness_row, duckdb_conn
+
+    oracles = registry.oracle_sql()
+    con = duckdb_conn(sf_dir)
+    prev = spark.conf.get("spark.sql.exchange.reuse")
+    spark.conf.set("spark.sql.exchange.reuse", "false")
+    try:
+        for name in ("topk_pagination", "topk_skyline"):
+            df = QUERIES[name](spark, sf_dir)
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "isFinalPlan=true" in plan, name
+            final = plan.split("== Initial Plan ==")[0]
+            n = len(re.findall(r"functions=\[percentile_approx\(", final))
+            assert n == 1, f"{name}: {n} final percentile_approx aggregates"
+            row = correctness_row(spark, con, sf_dir, QUERIES[name], oracles[name])
+            assert row["hash_match"], f"{name}: {row}"
+    finally:
+        spark.conf.set("spark.sql.exchange.reuse", prev)
+        con.close()
+
+
 def test_single_partition_window_whitelist(spark, sf_dir, capfd):
     # Runtime twin of the window assertions above: WindowExec logs
     # "No Partition Defined for Window operation" whenever a window

@@ -2,7 +2,10 @@
 
 Usage: python tools/capture_plans.py <outdir> [query ...]
 Writes <outdir>/<query>_<tag>.txt where tag is argv-controlled via
-$PLAN_TAG (default "before"). Analysis-only: no query is executed.
+$PLAN_TAG (default "before"). Each query is built and explained, never
+written; building can still run Spark jobs (reshape_pivot_wide's pivot
+value discovery, variant_call_kernel's reference-anchor collect — see the
+build_sec comment in bench.py).
 """
 
 from __future__ import annotations

@@ -1179,8 +1179,8 @@ def main() -> None:
     # cents / quantity), so plain key-shifted replication would leave
     # the histogram keys unchanged and probe nothing — these copies
     # shift the VALUES per copy (distribution shape preserved, value
-    # spaces disjoint), growing the histogram, the approxQuantile cut
-    # computation, the per-bucket windows, and (for spearman) both
+    # spaces disjoint), growing the histogram, the percentile_approx
+    # cuts, the per-bucket windows, and (for spearman) both
     # merge-hinted rank-map joins Nx honestly.
     from gisaid_pipeline_functions_spark.operators.topk import block_cumsum
 
@@ -1206,9 +1206,7 @@ def main() -> None:
         pv = cents.groupBy("v").agg(
             F.sum("g1").alias("n1v"), F.sum(1 - F.col("g1")).alias("n2v")
         )
-        # inline_cuts=False, as agg_ks_test passes: the probe times the
-        # plan the registered query runs
-        cum = block_cumsum(pv, "v", ["n1v", "n2v"], inline_cuts=False)
+        cum = block_cumsum(pv, "v", ["n1v", "n2v"])
         tot = pv.agg(F.sum("n1v").alias("n1"), F.sum("n2v").alias("n2"))
         d = cum.crossJoin(F.broadcast(tot)).select(
             "v",
@@ -1251,8 +1249,7 @@ def main() -> None:
 
         def midrank_map(col):
             hist = rows_q.groupBy(col).agg(F.count(F.lit(1)).alias("cnt"))
-            # inline_cuts=False, as agg_spearman_rho passes
-            cum = block_cumsum(hist, col, ["cnt"], inline_cuts=False)
+            cum = block_cumsum(hist, col, ["cnt"])
             return cum.select(
                 col,
                 (2 * F.col("cum_cnt") - F.col("cnt") + 1).alias(f"r{col}2"),

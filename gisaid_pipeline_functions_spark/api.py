@@ -119,7 +119,9 @@ def filter_sequences(
     (refusing overwrite, like the reference)."""
     seq_len = F.length("seq")
     reason = (
-        F.when(F.col("host") != host, "non_human")
+        # null-safe: a header with fewer than 7 fields has a NULL host,
+        # and NULL != host would send the record on to the length checks
+        F.when(~F.col("host").eqNullSafe(host), "non_human")
         .when(seq_len < lower_bound, "too_short")
         .when(seq_len >= upper_bound, "too_long")
         .when(x_content(F.col("seq"), "X") > cutoff, "too_ambiguous")

@@ -83,7 +83,7 @@ def sink_tsv_roundtrip(spark, sf_dir):
     "source_fasta_roundtrip",
     # FASTA records assembled from documents, written one-directory-per-
     # protein (K3, the engine-native Protein_File_Splitter), re-read with
-    # the distributed record-stitching scan (S1/S3) and header parse. The
+    # the distributed record scan (S1/S3) and header parse. The
     # oracle builds the same tuples directly from parquet — every record
     # must survive assembly, the partitioned write, and re-parsing intact.
     """

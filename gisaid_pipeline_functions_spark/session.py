@@ -24,8 +24,8 @@ def get_spark(app_name: str = "gisaid-pipeline-spark", cpus: int | None = None) 
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(max(cpus, 32)))
-        # Arrow transfer for the mapInPandas kernels (variant caller, FASTA
-        # assembly, embedding ops).
+        # Arrow transfer for the mapInPandas kernels (variant caller,
+        # embedding ops).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

@@ -4,14 +4,10 @@ The reference streams multi-GB FASTA files line by line in one process
 (Protein_File_Splitter.py:49–120) and writes one output file per protein by
 keeping a dict of open file handles. Here:
 
-- **read**: ``spark.read.text`` gives a distributed line scan; records are
-  assembled per partition with a ``mapPartitions``-style pandas iterator.
-  A FASTA record may straddle a line-split boundary, so the robust
-  distributed strategy is a two-pass grouping: tag each line with its file
-  + running header index (monotonic within a partition won't cross files),
-  done natively with a window over (file, line offset). For the common
-  single-record-per-2-lines exports (GISAID protein dumps), the fast path
-  pairs lines positionally.
+- **read**: ``spark.read.text`` with ``"\\n>"`` as the record delimiter
+  gives one row per FASTA record, whole even where it crosses a file
+  split, and the header/sequence split is a per-row projection. One
+  map-only scan; a multi-TB file parallelizes across all its splits.
 - **split-by-protein write** (K3): ``df.write.partitionBy('protein')`` —
   the engine-native replacement for the hand-rolled file-handle dict; at
   100 TB this is a single shuffle-free pass (scan partitions map straight
@@ -26,7 +22,7 @@ Time_Series.py:375–385, Protein_File_Splitter.py:134–138.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -34,78 +30,40 @@ def read_fasta(spark: SparkSession, path: str) -> DataFrame:
     """Distributed FASTA scan → one row per record:
     ``(header string, seq string)``.
 
-    ``spark.read.text`` + a cumulative count of header lines ordered by
-    file offset groups each sequence line with its header; multi-line
-    sequences concatenate in offset order. This is all native SQL —
-    the shuffle key is (file, record_index) so records reassemble
-    correctly regardless of how the file was split across tasks.
-    """
-    # Line order within a file: (block byte offset, id-within-partition).
-    # monotonically_increasing_id alone is NOT file-ordered — Spark packs
-    # file splits by size, not offset — but block_start anchors each split
-    # and ids ascend within it.
-    # File key = xxhash64 of the FULL path — basename alone collides when
-    # distinct files share a name (e.g. part-NNNNN files under different
-    # partition dirs), which would merge their record numbering. An 8-byte
-    # hash also keeps the shuffle key small vs carrying the path per line.
-    # CRLF inputs: strip the trailing \r explicitly (trim only strips
-    # spaces) so headers and sequence parts stay clean.
-    lines = (
-        spark.read.text(path)
-        .select(
-            F.regexp_replace(F.col("value"), "\r$", "").alias("line"),
-            F.xxhash64(F.input_file_name()).alias("file"),
-            F.expr("input_file_block_start()").alias("bs"),
-            F.monotonically_increasing_id().alias("off"),
-        )
-        .filter(F.length(F.trim("line")) > 0)
-    )
-    is_header = F.when(F.col("line").startswith(">"), 1).otherwise(0)
+    The text source splits on ``"\\n>"`` instead of on newlines, so each
+    row is one whole record: Hadoop's ``LineRecordReader`` reads on past
+    its split's end to finish the record it is in and skips the partial
+    record its split starts in, whatever the split size. The scan is
+    map-only: no exchange, window or join.
 
-    # Record numbering scales per BLOCK, not per file: a running header
-    # count within each (file, block) window — bounded by split size, fully
-    # parallel — plus a broadcast prefix of header counts from all earlier
-    # blocks of the same file. A window partitioned by file alone would
-    # funnel a single multi-TB FASTA through ONE task. Lines before the
-    # first header of a block get in-block count 0, so prefix alone lands
-    # them on the PREVIOUS block's last record — boundary-spanning records
-    # stitch correctly.
-    per_block = lines.groupBy("file", "bs").agg(F.sum(is_header).alias("cnt"))
-    w_prefix = (
-        Window.partitionBy("file")
-        .orderBy("bs")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prefixes = per_block.select(
-        "file", "bs", F.coalesce(F.sum("cnt").over(w_prefix), F.lit(0)).alias("prefix")
-    )
-    w_block = Window.partitionBy("file", "bs").orderBy("off")
-    recs = (
-        lines.join(F.broadcast(prefixes), ["file", "bs"])
-        .withColumn("rec", F.col("prefix") + F.sum(is_header).over(w_block))
+    ``header`` is the record's first line without its leading ``>`` (only
+    a file's first record still has it) or a trailing ``\\r``. ``seq``
+    joins the remaining lines, each without its trailing ``\\r`` and
+    surrounding spaces; blank lines add nothing. Records without a
+    non-whitespace character (blank lines before a file's first header)
+    are dropped.
+
+    On well-formed FASTA this is the rowset of a line-by-line parser. On
+    malformed input it differs from one in three ways:
+
+    (a) non-blank text before a file's first header becomes a record
+        headed by its first line instead of being dropped;
+    (b) a ``>>x`` header line that is not the file's first gives header
+        ``x``, not ``>x``;
+    (c) a bare ``>`` line with no sequence lines after it, following
+        another record, is dropped instead of giving ``("", "")``.
+    """
+    lines = F.split(F.col("value"), "\n")
+    seq_lines = F.transform(
+        F.slice(lines, 2, F.size(lines)), lambda line: F.trim(F.regexp_replace(line, "\r$", ""))
     )
     return (
-        recs.groupBy("file", "rec")
-        .agg(
-            F.max(F.when(F.col("line").startswith(">"), F.expr("substring(line, 2)"))).alias(
-                "header"
-            ),
-            F.concat_ws(
-                "",
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            ~F.col("line").startswith(">"),
-                            F.struct(
-                                F.col("bs"), F.col("off"), F.trim(F.col("line")).alias("part")
-                            ),
-                        )
-                    )
-                ).getField("part"),
-            ).alias("seq"),
+        spark.read.text(path, lineSep="\n>")
+        .filter(F.col("value").rlike("\\S"))
+        .select(
+            F.regexp_replace(lines[0], "^>|\r$", "").alias("header"),
+            F.concat_ws("", seq_lines).alias("seq"),
         )
-        .filter(F.col("header").isNotNull())
-        .select("header", "seq")
     )
 
 

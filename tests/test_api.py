@@ -78,12 +78,14 @@ def test_filter_sequences(spark):
             ("Spike|a|b|E1|c|d|Human", "MFVFLVLLPL", "Human"),
             ("Spike|a|b|E2|c|d|Bat", "MFVFLVLLPL", "Bat"),
             ("Spike|a|b|E3|c|d|Human", "MXXXXXXXPL", "Human"),
+            # short header: parse_headers gives a NULL host
+            ("Spike|a|b|E4", "MFVFLVLLPL", None),
         ],
         "header string, seq string, host string",
     )
     passing, tally = api.filter_sequences(records, lower_bound=5, upper_bound=100)
     t = {r["_reason"]: r["n"] for r in tally.collect()}
-    assert t == {"pass": 1, "non_human": 1, "too_ambiguous": 1}
+    assert t == {"pass": 1, "non_human": 2, "too_ambiguous": 1}
     assert passing.count() == 1
     assert t["pass"] + t["non_human"] + t["too_ambiguous"] == records.count()
 

@@ -4,8 +4,12 @@ from __future__ import annotations
 
 import glob
 import os
+import tempfile
+from collections import Counter
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from gisaid_pipeline_functions_spark.sources.fasta import (
     parse_headers,
@@ -96,8 +100,8 @@ def test_quality_filter_on_fasta(spark, fasta_path):
 
 
 def test_read_fasta_across_block_splits(spark, tmp_path):
-    # force tiny file splits so records straddle block boundaries — the
-    # per-block numbering + prefix stitch must reassemble them exactly
+    # force tiny file splits so records straddle split boundaries — the
+    # reader must still return every record whole
     import random
 
     random.seed(3)
@@ -121,9 +125,8 @@ def test_read_fasta_across_block_splits(spark, tmp_path):
 
 def test_read_fasta_same_basename_across_dirs(spark, tmp_path):
     # regression: two distinct files sharing a basename (the shape
-    # write_fasta_partitioned emits: protein=X/part-00000) must NOT have
-    # their record numbering merged — the file key is the full path hash,
-    # not the basename
+    # write_fasta_partitioned emits: protein=X/part-00000) must keep their
+    # records apart
     for sub, recs in [
         ("protein=A", ">A1|x\nMMMM\n>A2|x\nKKKK\n"),
         ("protein=B", ">B1|y\nFFFF\n"),
@@ -142,3 +145,85 @@ def test_read_fasta_crlf(spark, tmp_path):
     out = read_fasta(spark, str(f))
     got = {r["header"]: r["seq"] for r in out.collect()}
     assert got == {"H1|x": "MMKKKL", "H2|y": "FF"}
+
+
+def test_read_fasta_plan_is_map_only(spark, fasta_path):
+    # one scan, one row per record: records must not be rebuilt from lines
+    # through a shuffle, a window or a join
+    recs = read_fasta(spark, fasta_path)
+    recs.collect()
+    plan = recs._jdf.queryExecution().executedPlan().toString()
+    for op in ("Exchange", "Window", "Join"):
+        assert op not in plan, f"{op} in read_fasta's plan:\n{plan}"
+
+
+def _parse_fasta(text):
+    """Line-by-line reference parser: a ``>`` line opens a record, other
+    lines (trailing ``\\r`` and surrounding spaces removed) extend its
+    sequence, blank lines are skipped."""
+    recs = []
+    for line in text.split("\n"):
+        line = line[:-1] if line.endswith("\r") else line
+        if not line.strip(" "):
+            continue
+        if line.startswith(">"):
+            recs.append([line[1:], ""])
+        elif recs:
+            recs[-1][1] += line.strip(" ")
+    return [tuple(r) for r in recs]
+
+
+_BLANK = st.sampled_from(["", "  "])
+
+
+@st.composite
+def _fasta_text(draw):
+    """Well-formed FASTA text: random line ending, wrap width, space
+    padding, blank lines before, between and inside records, final newline
+    present or absent."""
+    records = draw(
+        st.lists(
+            st.tuples(
+                st.text(alphabet="ACxyz019|_-.", min_size=1, max_size=10),
+                st.text(alphabet="ACDEFGHIKLMNPQRSTVWYX", max_size=30),
+            ),
+            max_size=5,
+        )
+    )
+    width = draw(st.integers(min_value=1, max_value=12))
+    lines = draw(st.lists(_BLANK, max_size=2))
+    for header, seq in records:
+        lines.append(">" + header)
+        for i in range(0, len(seq), width):
+            pad = draw(st.sampled_from(["", " "]))
+            lines.append(pad + seq[i : i + width] + pad)
+            lines += draw(st.lists(_BLANK, max_size=1))
+        lines += draw(st.lists(_BLANK, max_size=1))
+    eol = draw(st.sampled_from(["\n", "\r\n"]))
+    return eol.join(lines) + (eol if draw(st.booleans()) else "")
+
+
+@given(texts=st.lists(_fasta_text(), min_size=1, max_size=3), split=st.integers(2, 16))
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+def test_read_fasta_matches_line_parser_at_every_split(spark, texts, split):
+    # every text is written `split` times under one glob, copy k behind k
+    # blank lines: with `split`-byte file splits, some copy has a split
+    # boundary before each byte of the text, "\n" | ">" included
+    conf = {"spark.sql.files.maxPartitionBytes": str(split), "spark.sql.files.openCostInBytes": "1"}
+    old = {k: spark.conf.get(k) for k in conf}
+    expected = Counter()
+    with tempfile.TemporaryDirectory() as d:
+        for i, text in enumerate(texts):
+            for k in range(split):
+                with open(os.path.join(d, f"f{i}_{k}.fa"), "wb") as f:
+                    f.write(("\n" * k + text).encode())
+            for rec in _parse_fasta(text):
+                expected[rec] += split
+        try:
+            for key, value in conf.items():
+                spark.conf.set(key, value)
+            got = Counter(tuple(r) for r in read_fasta(spark, os.path.join(d, "*.fa")).collect())
+        finally:
+            for key, value in old.items():
+                spark.conf.set(key, value)
+    assert got == expected

@@ -97,11 +97,12 @@ def pipeline_seq_counts(stages: dict[str, DataFrame], key_col: str = "protein") 
     per-key row counts at each named pipeline stage, aligned on the key —
     the funnel audit. Pass the stages as named DataFrames; each is counted
     once and the counts join on the key."""
+    if not stages:
+        raise ValueError("no stages given")
     out: DataFrame | None = None
     for name, df in stages.items():
         c = df.groupBy(key_col).agg(F.count(F.lit(1)).alias(name))
         out = c if out is None else out.join(c, key_col, "full")
-    assert out is not None, "no stages given"
     return out.na.fill(0)
 
 

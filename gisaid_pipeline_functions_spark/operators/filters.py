@@ -52,13 +52,6 @@ def quality_filter_tally(docs: DataFrame) -> DataFrame:
     )
 
 
-def quality_filter_pass(docs: DataFrame) -> DataFrame:
-    """F1 — the surviving rows (the reference writes these to the filtered
-    FASTA, Sequence_Filter.py:104–105)."""
-    reason = classify_quality(F.col("text"), F.col("lang"), F.col("n_chars"))
-    return docs.filter(reason == "pass")
-
-
 def bucket_histogram(df: DataFrame, col: str, edges: list[float]) -> DataFrame:
     """A8/F9 — counts per user-defined (uneven) bin edges plus overflow bin
     plus percentage (reference Seq_Tools.py:113–155; Pymol_Strings.py:60–65).

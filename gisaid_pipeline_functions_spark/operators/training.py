@@ -114,7 +114,11 @@ def chunk_text_windows(
     ``_w`` references below the explode read the generated attribute.
     (Verified via executedPlan at sf0.001; the r5 re-inline class only
     bites when every reference sits in one collapsed Project.)"""
-    assert stride_words >= 1 and window_words >= stride_words
+    if not 1 <= stride_words <= window_words:
+        raise ValueError(
+            f"need 1 <= stride_words <= window_words, got "
+            f"stride_words={stride_words}, window_words={window_words}"
+        )
     d = df.select(
         F.col(id_col).alias("doc_id"),
         F.split(F.col(text_col), " ").alias("_w"),

@@ -85,6 +85,9 @@ _RECHECK_ROUND = 19
 # - every query calling sources/fasta.py `read_fasta`, which became one
 #   map-only text scan with "\n>" as the record delimiter:
 #   source_fasta_roundtrip and sink_filtered_write_refusal.
+# - train_chunk_windows: operators/training.py `chunk_text_windows`
+#   checks its stride with a raised ValueError instead of an assert (a
+#   non-comment line change, so it enters under the rule above).
 _RECHECK_FIRST = frozenset(
     {
         "topk_pagination",
@@ -100,6 +103,7 @@ _RECHECK_FIRST = frozenset(
         "multimodal_byte_budget",
         "source_fasta_roundtrip",
         "sink_filtered_write_refusal",
+        "train_chunk_windows",
     }
 )
 

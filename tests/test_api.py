@@ -72,6 +72,13 @@ def test_pipeline_seq_counts(genomics, spark):
     assert row["raw"] == 2 and row["filtered"] == 1
 
 
+def test_pipeline_seq_counts_rejects_no_stages():
+    # a ValueError, not an assert: `python -O` would strip the check and
+    # fail later on `None.na`
+    with pytest.raises(ValueError, match="no stages"):
+        api.pipeline_seq_counts({})
+
+
 def test_filter_sequences(spark):
     records = spark.createDataFrame(
         [

@@ -4,6 +4,7 @@ harness; these pin the edge-case semantics."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from gisaid_pipeline_functions_spark.operators.training import (
@@ -218,6 +219,19 @@ def test_chunk_windows_invariants(spark):
         for _, _, start, n_words, chunk in ws:
             assert n_words == min(32, n - start)
             assert chunk == " ".join(words[start:start + n_words])
+
+
+@pytest.mark.parametrize("window, stride", [(32, 0), (32, -1), (8, 16)])
+def test_chunk_windows_rejects_bad_stride_at_call(spark, window, stride):
+    """A stride outside [1, window] raises at the call, under ``python -O``
+    too, instead of failing only when the query executes."""
+    from gisaid_pipeline_functions_spark.operators.training import (
+        chunk_text_windows,
+    )
+
+    docs = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="stride_words"):
+        chunk_text_windows(docs, window_words=window, stride_words=stride)
 
 
 def test_chunk_windows_property_vs_pure_python(spark):

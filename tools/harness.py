@@ -11,6 +11,9 @@ obeys the CLAUDE.md measurement traps by construction instead of by hand:
 - ``calibrate``: the pure-CPU shuffle+aggregate calibration op.
 - ``time_noop``: min-of-k noop-write timer, build and write separately
   (never ``count()``: it column-prunes computed columns).
+- ``time_queries``: the per-query loop of tools/sweep.py and
+  tools/scale_probe.py — ``time_noop`` plus a row count per registered
+  query, errors recorded instead of raised.
 - ``drive``/``write_rows``: the CORRECTNESS-row drive loop and its
   artifact, shared by tools/fulldrive.py and tools/check_queries.py.
 """
@@ -106,6 +109,36 @@ def time_noop(build: Callable[[], object], reps: int = 2) -> NoopTiming:
         best_w = min(best_w, t2 - t1)
         best_t = min(best_t, t2 - t0)
     return NoopTiming(best_b, best_w, best_t, df)
+
+
+class QueryRun(NamedTuple):
+    sec: float  # min-of-reps build + write, or the wall until the error
+    rows: int | None  # rows of the result; None on error
+    err: str | None  # "ERR <message>" when the query raised
+
+
+def time_queries(spark, names, sf_dir: str, reps: int = 2) -> dict[str, QueryRun]:
+    """``time_noop`` of each registered query in ``names`` on ``sf_dir``,
+    then its row count (cheap: the plan is warm and pruned). An exception
+    is recorded as the query's ``err``, never raised. Caches are cleared
+    after each query's reps: several operators persist() intermediates
+    they cannot safely unpersist (lazy returns), and across hundreds of
+    queries in one session those would pile up in block storage."""
+    from gisaid_pipeline_functions_spark import registry
+
+    qs = registry.queries()
+    out: dict[str, QueryRun] = {}
+    for name in names:
+        t0 = time.perf_counter()
+        try:
+            tm = time_noop(lambda: qs[name](spark, sf_dir), reps)
+            out[name] = QueryRun(round(tm.total_s, 3), tm.df.count(), None)
+        except Exception as ex:  # noqa: BLE001 — a sweep reports, never dies
+            out[name] = QueryRun(
+                round(time.perf_counter() - t0, 3), None, f"ERR {str(ex)[:120]}"
+            )
+        spark.catalog.clearCache()
+    return out
 
 
 def is_green(row: dict) -> bool:

@@ -27,13 +27,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gisaid_pipeline_functions_spark import registry  # noqa: E402
 from gisaid_pipeline_functions_spark.session import get_spark  # noqa: E402
-from tools.harness import ROOT, calibrate, round_number, time_noop  # noqa: E402
+from tools.harness import ROOT, calibrate, round_number, time_queries  # noqa: E402
 
 # Timing semantics tag: r7-r18 sweeps ran "noop_write" in a session of
 # their own (shuffle partitions = cpus, Spark's 1 GiB default heap); from
@@ -54,27 +53,8 @@ def main() -> None:
     load1 = os.getloadavg()[0] if hasattr(os, "getloadavg") else None
     calibration_sec = calibrate(spark, 10_000_000, cpus)
 
-    qs = registry.queries()
-    times: dict[str, tuple[float, object]] = {}
-    for name in sorted(qs):
-        t = time.perf_counter()
-        try:
-            # single-shot build + noop write (time_noop never count()s).
-            # Rows come from a count afterwards — cheap, since the plan
-            # is warm and pruned.
-            tm = time_noop(lambda: qs[name](spark, sf_dir), reps=1)
-            times[name] = (round(tm.total_s, 3), tm.df.count())
-        except Exception as ex:  # noqa: BLE001 — a sweep reports, never dies
-            times[name] = (
-                round(time.perf_counter() - t, 3), f"ERR {str(ex)[:120]}"
-            )
-        # several operators persist() intermediates they can never safely
-        # unpersist (lazy returns: triangle counts, phash LSH, cluster
-        # histogram — see operators/graph.py docstring); across a
-        # 179-query single session those caches accumulate in block
-        # storage until LRU eviction. Queries are independent, so drop
-        # everything between them (ADVICE r6).
-        spark.catalog.clearCache()
+    # single-shot build + noop write per query
+    times = time_queries(spark, sorted(registry.queries()), sf_dir, reps=1)
 
     rnd = round_number()
 
@@ -119,16 +99,16 @@ def main() -> None:
     cal_now = PINNED_IDLE_CALIBRATION / calibration_sec
     cal_prev = (PINNED_IDLE_CALIBRATION / prev_cal) if prev_cal else None
     deltas: dict[str, float | None] = {}
-    for name, (dt, _n) in times.items():
+    for name, run in times.items():
         deltas[name] = (
-            round(dt * cal_now - prev[name] * cal_prev, 3)
+            round(run.sec * cal_now - prev[name] * cal_prev, 3)
             if name in prev and cal_prev
             else None
         )
-    for name, (dt, n) in sorted(times.items(), key=lambda kv: -kv[1][0]):
+    for name, run in sorted(times.items(), key=lambda kv: -kv[1].sec):
         d = deltas[name]
         dv = f"{d:+8.3f}s" if d is not None else "     new"
-        print(f"{dt:8.3f}s  {dv}  {name}  rows={n}")
+        print(f"{run.sec:8.3f}s  {dv}  {name}  rows={run.err or run.rows}")
 
     out = ROOT / f"SWEEP_r{rnd:02d}.json"
     out.write_text(
@@ -145,12 +125,12 @@ def main() -> None:
                 # r9-and-earlier deltas were current-box seconds
                 "delta_units": "anchor_equivalent_sec",
                 "queries": {
-                    name: {"sec": dt,
-                           "calibrated_sec": round(dt * cal_now, 3),
-                           "rows": n if isinstance(n, int) else None,
-                           "err": None if isinstance(n, int) else str(n),
+                    name: {"sec": run.sec,
+                           "calibrated_sec": round(run.sec * cal_now, 3),
+                           "rows": run.rows,
+                           "err": run.err,
                            "delta_vs_prev": deltas[name]}
-                    for name, (dt, n) in times.items()
+                    for name, run in times.items()
                 },
             },
             indent=1,

@@ -115,9 +115,10 @@ def filter_sequences(
     host: str = "Human",
 ) -> tuple[DataFrame, DataFrame]:
     """Sequence_Filter.filter_sequences (Sequence_Filter.py:92–156):
-    host / length / ambiguity filter with the rejection tally, in ONE
-    pass. Returns (passing records, tally); optionally writes the FASTA
-    (refusing overwrite, like the reference)."""
+    host / length / ambiguity filter with the rejection tally, both from
+    one reason column. Returns (passing records, tally); with ``out_path``
+    it also writes the passing FASTA (refusing overwrite, like the
+    reference), a job separate from the tally's."""
     seq_len = F.length("seq")
     reason = (
         # null-safe: a header with fewer than 7 fields has a NULL host,
@@ -213,10 +214,11 @@ def align_clusters(
         F.concat_ws("|", F.col(cluster_col).cast("string"), F.col(id_col).cast("string")).alias("id"),
         F.col(seq_col).alias("sequence"),
     )
+    cluster = F.split(F.col("id"), "\\|").getItem(0)
     parts = (
-        tagged.repartition(num_partitions, "id")
+        tagged.repartition(num_partitions, cluster)
         if num_partitions
-        else tagged.repartition(F.split(F.col("id"), "\\|").getItem(0))
+        else tagged.repartition(cluster)
     )
     out = run_external_tool(parts, command)
     split_id = F.split(F.col("id"), "\\|", 2)

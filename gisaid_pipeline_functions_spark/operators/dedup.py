@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .layout import spread
+
 
 def word_shingles(
     df: DataFrame, id_col: str, text_col: str, k: int = 3, distinct: bool = True
@@ -511,19 +513,8 @@ def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     summed vote is positive. The word hashes are materialized once per row
     (``transform``), then one ``aggregate`` folds them into a 16-long vote
     vector with ``zip_with`` — per-document work only, which is exactly
-    what a per-document fingerprint should be at 100 TB.
-
-    Under-split guard (the r9 exactsubstr rule): the per-word fold is
-    ~16 interpreted ops per md5, and a small single-file parquet corpus
-    is ONE input split — the whole fold would run on one core.
-    Conditional repartition to defaultParallelism (a no-op on any real
-    multi-split corpus) measured 0.44× on dedup_simhash at sf0.1
-    (interleaved min-of-3, local[32]: 1.584 → 0.690 s) — unlike the
-    r12 minhash-family guard (reverted, neutral), the fold here IS the
-    whole query."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
+    what a per-document fingerprint should be at 100 TB."""
+    df = spread(df)  # 0.44× on dedup_simhash at sf0.1, local[32]
     hashes = F.transform(
         F.filter(F.split(F.col(text_col), " "), lambda w: F.length(w) > 0),
         lambda w: F.md5(w),
@@ -681,15 +672,7 @@ def span_surgery(
         F.col(text_col).alias("text"),
         F.split(F.col(text_col), " ").alias("w"),
     )
-    # Under-split guard (the r9 exactsubstr rule): the k-word md5
-    # shingle fold below is the query's dominant map stage and a
-    # single-file parquet corpus is ONE input split. Conditional
-    # repartition (no-op on a real multi-split corpus) measured 0.76×
-    # on dedup_span_surgery at sf0.1 (interleaved min-of-3, local[32]:
-    # 2.032 → 1.541 s).
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < target:
-        base = base.repartition(target)
+    base = spread(base)  # 0.76× on dedup_span_surgery at sf0.1, local[32]
     w = F.col("w")
     # (pos, hash) per shingle start; the word array is a materialized
     # attribute so element_at doesn't re-evaluate split() (CLAUDE.md rule)
@@ -1003,15 +986,7 @@ def exactsubstr_chars(
     if prefilter and w > min_run:
         raise ValueError("w must be <= min_run for the no-lost-span guarantee")
     base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-    # The per-position md5 gram fold is the most CPU-intensive map stage
-    # in the repo (O(chars) digests per doc, interpreted HOF) and the
-    # corpus often arrives as one parquet file -> ONE task (measured r9:
-    # the whole 20 s sf0.1 wall was a single-core gram stage; 3.3x
-    # end-to-end from spreading it). Repartition the scan BEFORE the
-    # fold — the repartition-CPU-bound-stages rule from SCALING.md.
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < target:
-        base = base.repartition(target)
+    base = spread(base)  # 3.3× end to end on dedup_exactsubstr_chars at sf0.1
     t = F.col("text")
     grams = F.when(
         F.length(t) >= k,

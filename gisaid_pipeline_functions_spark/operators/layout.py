@@ -9,6 +9,10 @@ column's per-file range at full width — a filter on the second column
 reads everything. Interleaving the bits of both columns makes each
 contiguous Z-range an axis-aligned block of the value space, so both
 columns' ranges shrink like sqrt(files).
+
+``spread`` is the one under-split guard: CPU-bound map stages (Python
+kernels, md5 folds, bootstrap fan-outs) call it on their input so that a
+single-file scan does not run the whole stage on one core.
 """
 
 from __future__ import annotations
@@ -48,3 +52,43 @@ def bucket_stats(
         F.max(y).alias("max_y"),
         F.count(F.lit(1)).alias("n"),
     )
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """``df`` spread over at least ``defaultParallelism`` partitions,
+    decided from its physical plan without running any of it.
+
+    - A streaming frame keeps its source's partitioning.
+    - A shuffle exchange feeding the final stage already sets its width:
+      ``df`` is returned unchanged.
+    - A broadcast exchange feeding it is a side input; counting the
+      stage's partitions would run the broadcast, so ``df`` is
+      repartitioned.
+    - With no exchange, the partitions are the scans' splits; counting
+      them only plans the scans. Fewer than the target are repartitioned.
+    """
+    if df.isStreaming:
+        return df
+    edges = _stage_edges(df._jdf.queryExecution().executedPlan())
+    if "shuffle" in edges:
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if "broadcast" in edges or df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
+
+def _stage_edges(node) -> set[str]:
+    """Kinds of exchange ("shuffle", "broadcast") at the inputs of the
+    stage that computes ``node``, read from the JVM plan tree. Adaptive
+    plans are read through their current plan and cached frames through
+    the plan that fills the cache."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _stage_edges(node.executedPlan())
+    if name == "InMemoryTableScanExec":
+        return _stage_edges(node.relation().cachedPlan())
+    if name.endswith("ExchangeExec"):
+        return {"broadcast" if name.startswith("Broadcast") else "shuffle"}
+    children = node.children()
+    return set().union(*(_stage_edges(children.apply(i)) for i in range(children.size())))

@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .layout import spread
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -154,11 +156,7 @@ def extract_features(
                 }
             )
 
-    target = media.sparkSession.sparkContext.defaultParallelism
-    inp = media
-    if inp.rdd.getNumPartitions() < target:
-        inp = inp.repartition(target)  # decode is CPU-bound
-    return inp.mapInPandas(run, FEATURE_SCHEMA)
+    return spread(media).mapInPandas(run, FEATURE_SCHEMA)
 
 
 RESIZE_SCHEMA = StructType(
@@ -205,11 +203,7 @@ def resize_media(media: DataFrame, factor: int = 2) -> DataFrame:
                 out["out_md5"].append(hashlib.md5(body).hexdigest())
             yield pd.DataFrame(out)
 
-    target = media.sparkSession.sparkContext.defaultParallelism
-    inp = media
-    if inp.rdd.getNumPartitions() < target:
-        inp = inp.repartition(target)  # decode+resample is CPU-bound
-    return inp.mapInPandas(run, RESIZE_SCHEMA)
+    return spread(media).mapInPandas(run, RESIZE_SCHEMA)
 
 
 def frame_sample(media: DataFrame, every_n_bytes: int = 64) -> DataFrame:
@@ -394,11 +388,7 @@ def bmp_dhash_fingerprints(media: DataFrame, grid: int = 8) -> DataFrame:
                 hashes.append(ph)
             yield pd.DataFrame({"media_id": ids, "phash": hashes})
 
-    target = media.sparkSession.sparkContext.defaultParallelism
-    inp = media
-    if inp.rdd.getNumPartitions() < target:
-        inp = inp.repartition(target)
-    return inp.mapInPandas(run, "media_id long, phash long")
+    return spread(media).mapInPandas(run, "media_id long, phash long")
 
 
 def bmp_phash_near_dups(
@@ -568,11 +558,7 @@ def documents_as_bmp(docs: DataFrame) -> DataFrame:
                 out["n_bytes"].append(len(bmp))
             yield pd.DataFrame(out)
 
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    inp = docs.select("doc_id", "text")
-    if inp.rdd.getNumPartitions() < target:
-        inp = inp.repartition(target)
-    return inp.mapInPandas(run, MEDIA_SCHEMA)
+    return spread(docs.select("doc_id", "text")).mapInPandas(run, MEDIA_SCHEMA)
 
 
 BMP_DECODE_SCHEMA = StructType(
@@ -610,11 +596,7 @@ def bmp_decode(media: DataFrame) -> DataFrame:
                 out["pixel_md5"].append(hashlib.md5(px).hexdigest())
             yield pd.DataFrame(out)
 
-    target = media.sparkSession.sparkContext.defaultParallelism
-    inp = media
-    if inp.rdd.getNumPartitions() < target:
-        inp = inp.repartition(target)
-    return inp.mapInPandas(run, BMP_DECODE_SCHEMA)
+    return spread(media).mapInPandas(run, BMP_DECODE_SCHEMA)
 
 
 def bmp_resize(media: DataFrame, factor: int = 2) -> DataFrame:
@@ -647,11 +629,7 @@ def bmp_resize(media: DataFrame, factor: int = 2) -> DataFrame:
                 out["out_md5"].append(hashlib.md5(small).hexdigest())
             yield pd.DataFrame(out)
 
-    target = media.sparkSession.sparkContext.defaultParallelism
-    inp = media
-    if inp.rdd.getNumPartitions() < target:
-        inp = inp.repartition(target)
-    return inp.mapInPandas(run, RESIZE_SCHEMA)
+    return spread(media).mapInPandas(run, RESIZE_SCHEMA)
 
 
 def encode_wav_pcm16(sample_rate: int, samples: list[int]) -> bytes:
@@ -736,11 +714,7 @@ def documents_as_wav(docs: DataFrame) -> DataFrame:
                 out["n_bytes"].append(len(wav))
             yield pd.DataFrame(out)
 
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    inp = docs.select("doc_id", "text")
-    if inp.rdd.getNumPartitions() < target:
-        inp = inp.repartition(target)
-    return inp.mapInPandas(run, MEDIA_SCHEMA)
+    return spread(docs.select("doc_id", "text")).mapInPandas(run, MEDIA_SCHEMA)
 
 
 def wav_decode_stats(media: DataFrame) -> DataFrame:
@@ -782,11 +756,7 @@ def wav_decode_stats(media: DataFrame) -> DataFrame:
                 )
             yield pd.DataFrame(out)
 
-    target = media.sparkSession.sparkContext.defaultParallelism
-    inp = media
-    if inp.rdd.getNumPartitions() < target:
-        inp = inp.repartition(target)
-    return inp.mapInPandas(
+    return spread(media).mapInPandas(
         run,
         "media_id long, sample_rate long, n_samples long, duration_us long, "
         "peak long, energy long, rms double",
@@ -889,11 +859,7 @@ def wav_energy_windows(
                     )
             yield pd.DataFrame(out)
 
-    target = media.sparkSession.sparkContext.defaultParallelism
-    inp = media
-    if inp.rdd.getNumPartitions() < target:
-        inp = inp.repartition(target)
-    return inp.mapInPandas(
+    return spread(media).mapInPandas(
         run,
         "media_id long, window_no long, n_samples long, energy long, "
         "rms double, is_silent boolean",
@@ -1045,8 +1011,4 @@ def bmp_patchify(media: DataFrame, grid: int = 2) -> DataFrame:
                         out["sum_px"].append(sums[py][pc])
             yield pd.DataFrame(out)
 
-    target = media.sparkSession.sparkContext.defaultParallelism
-    inp = media
-    if inp.rdd.getNumPartitions() < target:
-        inp = inp.repartition(target)
-    return inp.mapInPandas(run, PATCHIFY_SCHEMA)
+    return spread(media).mapInPandas(run, PATCHIFY_SCHEMA)

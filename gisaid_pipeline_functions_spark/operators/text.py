@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .layout import spread
+
 # tiny English function-word list for the n-gram/stopword heuristic
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
 
@@ -425,18 +427,10 @@ def classifier_features(
     structural weak label (Gopher word-count + mean-word-length rules)
     and one row per unigram/bigram md5-hashed into ``n_buckets`` —
     ``(id, pos, b)``. Works on BATCH and STREAMING frames alike (every
-    expression is map-side); the CPU-spreading repartition guard only
-    applies to batch inputs (a stream's partitioning is the source's)."""
-    base = df.select(F.col(id_col).alias("id"), words(F.col(text_col)).alias("w"))
-    # the gram build + explode + md5 stage is CPU-bound and a small
-    # single-file parquet scan arrives as ONE partition — spread it
-    # across the executor pool first (the agg_cms_heavy_hitters /
-    # variant-kernel guard; without it the whole pipeline ran on one
-    # core: 10 s instead of ~2 s at sf0.1)
-    if not df.isStreaming:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if base.rdd.getNumPartitions() < target:
-            base = base.repartition(target)
+    expression is map-side)."""
+    base = spread(  # 10 s → ~2 s on the classifier pipeline at sf0.1
+        df.select(F.col(id_col).alias("id"), words(F.col(text_col)).alias("w"))
+    )
     w = F.col("w")
     n_words = F.size(w)
     mean_wlen = F.when(n_words == 0, F.lit(0.0)).otherwise(
@@ -1150,10 +1144,7 @@ def dsir_resample(
     part — runs twice; same documented cache lifetime as bpe_learn)."""
     from .training import hex_uniform_u32
 
-    base = df.select(F.col(id_col).alias("id"), words(F.col(text_col)).alias("w"))
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < target:
-        base = base.repartition(target)  # gram build is CPU-bound
+    base = spread(df.select(F.col(id_col).alias("id"), words(F.col(text_col)).alias("w")))
     w = F.col("w")
     n_words = F.size(w)
     mean_wlen = F.when(n_words == 0, F.lit(0.0)).otherwise(

@@ -22,8 +22,9 @@ quirks kept for output parity:
 
 Spark shape: one ``mapInPandas`` over the aligned-sequence table with the
 per-protein reference rows broadcast — embarrassingly parallel across
-sequences, Arrow-batched, no shuffle. Everything downstream of the kernel
-(reports, counts, pivots) is declarative DataFrame ops.
+sequences, Arrow-batched; the only exchange is the round-robin spread
+(operators/layout.py) that an under-split input gets. Everything downstream
+of the kernel (reports, counts, pivots) is declarative DataFrame ops.
 """
 
 from __future__ import annotations
@@ -38,6 +39,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .layout import spread
 
 GAP = "-"
 
@@ -299,13 +302,7 @@ def call_variants(aligned: DataFrame, references: dict[str, str]) -> DataFrame:
             yield pd.DataFrame(out)
 
     cols = ["protein", "cluster_id", "cluster_size", "aligned_seq"]
-    inp = aligned.select(*cols)
-    # the kernel is CPU-bound Python; a single-file parquet scan arrives as
-    # ONE partition — spread it across the executor pool first
-    target = aligned.sparkSession.sparkContext.defaultParallelism
-    if inp.rdd.getNumPartitions() < target:
-        inp = inp.repartition(target)
-    return inp.mapInPandas(run, VARIANT_SCHEMA)
+    return spread(aligned.select(*cols)).mapInPandas(run, VARIANT_SCHEMA)
 
 
 def break_up_deletions(variants: DataFrame) -> DataFrame:

@@ -14,7 +14,7 @@ broadcast, and everything stays in whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.timeseries import weekly_frequency, weekly_percentage

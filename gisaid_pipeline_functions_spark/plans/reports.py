@@ -9,7 +9,7 @@ be written distributed (``df.write.text``) or collected for small outputs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.strings import natural_sort_key

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..operators.layout import spread
 from ..registry import register
 from ..sources.tables import load_table
 
@@ -366,16 +367,10 @@ def agg_cms_heavy_hitters(spark, sf_dir):
             F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
         ).alias("word")
     )
-    # the ×depth hash fanout is CPU-bound and a single-file parquet scan
-    # arrives as ONE partition — spread it across the executor pool first
-    # (same guard as the variant kernel, operators/variant_caller.py:305);
-    # then materialize once for the three consumers (sketch build, exact
+    # materialize once for the three consumers (sketch build, exact
     # heavy-hitter scan, probe join), same reuse pattern as
     # agg_hll_sketch_merge's per-type sketches
-    target = spark.sparkContext.defaultParallelism
-    if w.rdd.getNumPartitions() < target:
-        w = w.repartition(target)
-    w = w.localCheckpoint(eager=True)
+    w = spread(w).localCheckpoint(eager=True)
     sketch = cms_sketch(w, "word", depth=4, width=64)
     cand = (
         w.groupBy("word")
@@ -1061,18 +1056,12 @@ _BOOT_W_SQL = (
 def agg_poisson_bootstrap_ci(spark, sf_dir):
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.floor(F.col("value") * 1000000.0 + 0.5).cast("long").alias("vu"),
+    ev = spread(
+        load_table(spark, sf_dir, "events").select(
+            "event_id",
+            F.floor(F.col("value") * 1000000.0 + 0.5).cast("long").alias("vu"),
+        )
     )
-    # the events file is one input split at bench scale — spread the
-    # 50x md5 expansion across cores before it happens (r17: the same
-    # conditional defaultParallelism guard as agg_bootstrap_ab_diff /
-    # span_surgery; a no-op whenever the scan already has enough
-    # splits, and value-free — the md5 draw is per-(event_id, b))
-    target = spark.sparkContext.defaultParallelism
-    if ev.rdd.getNumPartitions() < target:
-        ev = ev.repartition(target)
     rep = ev.withColumn(
         "b", F.explode(F.sequence(F.lit(0), F.lit(_BOOT_B - 1)))
     )
@@ -2421,18 +2410,7 @@ def agg_bootstrap_ab_diff(spark, sf_dir):
         F.sum(gi * F.col("cents")).alias("sa"),
         F.sum((1 - gi) * F.col("cents")).alias("sb"),
     )
-    # the orders file is one input split at bench scale — spread the
-    # 32x md5 expansion across cores before it happens (the SCALING.md
-    # rule: repartition CPU-bound stages, don't shrink maxPartitionBytes).
-    # r17: CONDITIONAL, to defaultParallelism (the span_surgery guard
-    # shape) — the old unconditional repartition(32) would SHRINK a
-    # multi-split corpus to 32 partitions at scale and over-partitions
-    # the driver's lower-core bench runs; a no-op whenever the scan
-    # already has enough splits.
-    target = spark.sparkContext.defaultParallelism
-    if cents.rdd.getNumPartitions() < target:
-        cents = cents.repartition(target)
-    reps = cents.withColumn(
+    reps = spread(cents).withColumn(
         "b", F.explode(F.sequence(F.lit(1), F.lit(32)))
     )
     u = hex_uniform_u32(

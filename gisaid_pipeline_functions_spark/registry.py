@@ -88,6 +88,10 @@ _RECHECK_ROUND = 19
 # - train_chunk_windows: operators/training.py `chunk_text_windows`
 #   checks its stride with a raised ValueError instead of an assert (a
 #   non-comment line change, so it enters under the rule above).
+# - every query whose build reaches the under-split guard, now the one
+#   function operators/layout.py `spread`, which reads the physical plan
+#   instead of counting partitions (found by wrapping DataFrame.rdd while
+#   building the whole registry).
 _RECHECK_FIRST = frozenset(
     {
         "topk_pagination",
@@ -104,6 +108,33 @@ _RECHECK_FIRST = frozenset(
         "source_fasta_roundtrip",
         "sink_filtered_write_refusal",
         "train_chunk_windows",
+        "report_mutation_csv",
+        "report_text_lines",
+        "plan_udf_discipline",
+        "variant_substitutions",
+        "variant_single_dels",
+        "variant_single_ins",
+        "variant_call_kernel",
+        "variant_mutation_counts",
+        "agg_cms_heavy_hitters",
+        "agg_poisson_bootstrap_ci",
+        "agg_bootstrap_ab_diff",
+        "dedup_simhash",
+        "dedup_span_surgery",
+        "dedup_span_surgery_within",
+        "dedup_exactsubstr_chars",
+        "text_classifier_score",
+        "streaming_classifier_score",
+        "text_calibration_curve",
+        "sample_dsir",
+        "sample_ess_diagnostic",
+        "multimodal_decode_dims",
+        "multimodal_resize",
+        "multimodal_phash_neardup",
+        "multimodal_aspect_bucket",
+        "multimodal_wav_stats",
+        "multimodal_audio_energy",
+        "multimodal_patchify",
     }
 )
 

@@ -30,5 +30,7 @@ def get_spark(app_name: str = "gisaid-pipeline-spark", cpus: int | None = None) 
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # no [Stage N:...] bars on stderr: they bury the timing tools' output
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )

@@ -92,3 +92,32 @@ def test_align_clusters_api_keeps_cluster_tags(spark):
     assert {(r["cluster"], r["id"], r["sequence"]) for r in out} == {
         (str(i % 3), str(i), f"s{i}") for i in range(12)
     }
+
+
+def test_align_clusters_keeps_each_cluster_in_one_invocation(spark, tmp_path):
+    # The stand-in tool records the clusters of each FASTA it is handed;
+    # with num_partitions set, no cluster may reach two invocations.
+    from gisaid_pipeline_functions_spark.api import align_clusters
+
+    marks = tmp_path / "marks"
+    marks.mkdir()
+    script = (
+        "import sys, tempfile\n"
+        "text = open(sys.argv[1]).read()\n"
+        "clusters = {l[1:].split('|')[0] for l in text.splitlines() if l.startswith('>')}\n"
+        f"with tempfile.NamedTemporaryFile('w', dir={str(marks)!r}, delete=False) as m:\n"
+        "    m.write(' '.join(sorted(clusters)))\n"
+        "open(sys.argv[2], 'w').write(text)\n"
+    )
+    df = spark.range(60).select(
+        (F.col("id") % 12).alias("cluster"),
+        F.col("id").cast("string").alias("id"),
+        F.concat(F.lit("s"), F.col("id")).alias("sequence"),
+    )
+    out = align_clusters(
+        df, [sys.executable, "-c", script, "{input}", "{output}"], num_partitions=4
+    ).collect()
+    assert len(out) == 60
+    runs = [p.read_text().split() for p in marks.iterdir()]
+    seen = [c for run in runs for c in run]
+    assert sorted(seen) == sorted(str(c) for c in range(12))

@@ -10,10 +10,10 @@ engines can't flip a rank or a threshold.
 Scale paths:
 - brute-force top-k: queries × corpus join — correct baseline; viable when
   one side is small enough to broadcast (queries usually are).
-- IVF (probe=1): partition the corpus by a coarse quantizer (here: the
-  given label as the cell id, centroids computed per cell), route each
-  query to its nearest centroid, search only that cell — the join key
-  becomes (cell), turning an n×m cross join into per-cell joins.
+- IVF: partition the corpus by a coarse quantizer (here: the given
+  label as the cell id, centroids computed per cell), route each query
+  to its ``probe`` nearest centroids, search only those cells — the join
+  key becomes (cell), turning an n×m cross join into per-cell joins.
 """
 
 from __future__ import annotations
@@ -54,6 +54,18 @@ def dot(a: Column, b: Column) -> Column:
 
 def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+def _sq_l2(a: Column, b: Column) -> Column:
+    """Unrounded squared L2: the element-order fold ``Σ (x - y)²`` (the
+    same left fold as the oracle's ``list_sum``). Callers round it — 6dp
+    for every assignment, LUT and routing distance, 9dp in
+    ``kcenter_greedy``."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -214,25 +226,20 @@ def ivf_topk(
     vec_col: str = "embedding",
     label_col: str = "label",
     k: int = 3,
+    probe: int = 1,
 ) -> DataFrame:
-    """IVF probe=1: route each query to its nearest centroid, then exact
-    top-k within that cell only."""
+    """IVF over label cells: route each query to its ``probe`` nearest
+    label centroids, then exact top-k within those cells only, ranked
+    globally per query. ``probe`` > 1 is the recall knob (quantization
+    error near cell boundaries is the probe=1 failure mode); cost scales
+    with probe/n_cells of the corpus, still never a full scan. The
+    labeled corpus is scanned directly — the index twin
+    ``ivf_index_topk`` reads postings and fetches vectors by id."""
     from pyspark.sql import Window
 
     cents = label_centroids(corpus, label_col, vec_col)
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    routed = q.join(F.broadcast(cents)).select(
-        "query_id",
-        "qvec",
-        "cell",
-        F.round(cosine(F.col("qvec"), F.col("centroid")), 6).alias("ccos"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("cell"))
-    assigned = (
-        routed.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "qvec", "cell")
-    )
+    assigned = _probe_cells(q, cents, "centroid", probe)
     c = corpus.select(
         F.col(id_col).alias("cand_id"),
         F.col(vec_col).alias("cvec"),
@@ -252,6 +259,57 @@ def ivf_topk(
     )
 
 
+def _probe_cells(
+    q: DataFrame, cents: DataFrame, cent_col: str, probe: int
+) -> DataFrame:
+    """Cosine routing shared by ``ivf_topk`` and ``ivf_index_topk``:
+    each ``(query_id, qvec)`` row against the broadcast centroid table,
+    rounded to 6dp, keeps its ``probe`` best cells under (ccos desc,
+    cell asc) → ``(query_id, qvec, cell)``."""
+    from pyspark.sql import Window
+
+    routed = q.join(F.broadcast(cents)).select(
+        "query_id",
+        "qvec",
+        "cell",
+        F.round(cosine(F.col("qvec"), F.col(cent_col)), 6).alias("ccos"),
+    )
+    wq = Window.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("cell"))
+    return (
+        routed.withColumn("rn", F.row_number().over(wq))
+        .filter(F.col("rn") <= probe)
+        .select("query_id", "qvec", "cell")
+    )
+
+
+def _pick_nearest(df: DataFrame, keys: list[str]) -> DataFrame:
+    """The per-row nearest-centroid pick: each ``(*keys, vec_id, v)``
+    row carries its candidate centroids as the array ``_ca`` of
+    ``(cell, c)`` structs and keeps the first of ``array_sort`` over
+    ``(round(sq_l2, 6) AS dist, cell)`` structs → ``(*keys, vec_id, v,
+    cell, dist)``. ``array_sort`` on structs orders by field position,
+    so the pick is (dist asc, cell asc)."""
+    picked = F.element_at(
+        F.array_sort(
+            F.transform(
+                F.col("_ca"),
+                lambda s: F.struct(
+                    F.round(_sq_l2(F.col("v"), s["c"]), 6).alias("dist"),
+                    s["cell"].alias("cell"),
+                ),
+            )
+        ),
+        1,
+    )
+    return df.select(*keys, "vec_id", "v", picked.alias("_p")).select(
+        *keys,
+        "vec_id",
+        "v",
+        F.col("_p.cell").alias("cell"),
+        F.col("_p.dist").alias("dist"),
+    )
+
+
 def _nearest_cell(base: DataFrame, cents: DataFrame) -> DataFrame:
     """Assign each vector to its nearest centroid by squared L2, rounded
     to 6dp before the argmin (sum-order differences between engines must
@@ -259,7 +317,8 @@ def _nearest_cell(base: DataFrame, cents: DataFrame) -> DataFrame:
 
     Map-side argmin (r17): the centroid table collapses to ONE
     broadcast array row and the per-vector argmin is an in-row
-    ``array_sort`` over ``(dist, cell)`` structs — ``array_sort`` on
+    ``array_sort`` over ``(dist, cell)`` structs (``_pick_nearest``,
+    shared with ``_nearest_cell_per_subspace``) — ``array_sort`` on
     structs orders by field position, so (dist asc, cell asc) is
     EXACTLY the old ``row_number() over (dist, cell)`` tie-break and
     the picked row is value-identical (the dist expression itself is
@@ -285,36 +344,26 @@ def _nearest_cell(base: DataFrame, cents: DataFrame) -> DataFrame:
     non-empty corpus and persisted centroid tables are non-empty by
     construction)."""
     ca = cents.agg(F.collect_list(F.struct("cell", "c")).alias("_ca"))
-    dist_of = lambda s: F.round(  # noqa: E731
-        F.aggregate(
-            F.zip_with(
-                F.col("v"), s["c"], lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
+    return _pick_nearest(base.crossJoin(F.broadcast(ca)), [])
+
+
+def _cell_means(df: DataFrame, keys: list[str], vec: Column) -> DataFrame:
+    """The centroid recompute: per ``keys`` group, the per-dim mean of
+    its members' ``vec`` ROUNDED to 6dp, rebuilt as an array ordered by
+    position → ``(*keys, c)``. The rounding puts every recomputed
+    centroid on a lattice both engines agree on (sum order can differ;
+    ``round(avg, 6)`` absorbs it). Serves the Lloyd step of both trains
+    and the codebook recompute of both one-shot ADC searches."""
+    per_dim = (
+        df.select(*keys, F.posexplode(vec).alias("pos", "x"))
+        .groupBy(*keys, "pos")
+        .agg(F.round(F.avg("x"), 6).alias("m"))
     )
-    picked = F.element_at(
-        F.array_sort(
-            F.transform(
-                F.col("_ca"),
-                lambda s: F.struct(
-                    dist_of(s).alias("dist"), s["cell"].alias("cell")
-                ),
-            )
-        ),
-        1,
-    )
-    return (
-        base.crossJoin(F.broadcast(ca))
-        .select("vec_id", "v", picked.alias("_p"))
-        .select(
-            "vec_id",
-            "v",
-            F.col("_p.cell").alias("cell"),
-            F.col("_p.dist").alias("dist"),
-        )
+    return per_dim.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "m"))),
+            lambda s: s["m"],
+        ).alias("c")
     )
 
 
@@ -353,16 +402,7 @@ def kmeans_centroids(
         )
     )
     for _ in range(iterations):
-        assigned = _nearest_cell(base, cents)
-        per_dim = assigned.select(
-            "cell", F.posexplode("v").alias("pos", "x")
-        ).groupBy("cell", "pos").agg(F.round(F.avg("x"), 6).alias("m"))
-        cents = per_dim.groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("c")
-        )
+        cents = _cell_means(_nearest_cell(base, cents), ["cell"], F.col("v"))
     return cents
 
 
@@ -414,46 +454,15 @@ def _nearest_cell_per_subspace(
     per-subspace centroid tables collapse to m broadcast array rows
     (one per subspace, via a broadcast hash join on ``subspace`` instead
     of ``_nearest_cell``'s one-row crossJoin) and each slice row argmins
-    over ITS subspace's array with the identical in-row ``array_sort``
-    over ``(dist, cell)`` structs — the same zip_with/aggregate squared-
-    L2 fold rounded to 6dp, the same (dist asc, cell asc) tie-break — so
+    over ITS subspace's array with the same ``_pick_nearest`` — so
     every per-row pick is bit-identical to running ``_nearest_cell``
     once per subspace. Still zero Exchange, zero Window: the join build
     side is m tiny array rows."""
     ca = cents.groupBy("subspace").agg(
         F.collect_list(F.struct("cell", "c")).alias("_ca")
     )
-    dist_of = lambda s: F.round(  # noqa: E731
-        F.aggregate(
-            F.zip_with(
-                F.col("v"), s["c"], lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
-    picked = F.element_at(
-        F.array_sort(
-            F.transform(
-                F.col("_ca"),
-                lambda s: F.struct(
-                    dist_of(s).alias("dist"), s["cell"].alias("cell")
-                ),
-            )
-        ),
-        1,
-    )
-    return (
-        slices.join(F.broadcast(ca), "subspace")
-        .select("subspace", "vec_id", "v", picked.alias("_p"))
-        .select(
-            "subspace",
-            "vec_id",
-            "v",
-            F.col("_p.cell").alias("cell"),
-            F.col("_p.dist").alias("dist"),
-        )
+    return _pick_nearest(
+        slices.join(F.broadcast(ca), "subspace"), ["subspace"]
     )
 
 
@@ -498,17 +507,10 @@ def _subspace_kmeans_centroids(
     )
     slices = _subspace_slices(base, m, sub_dim)
     for _ in range(iterations):
-        assigned = _nearest_cell_per_subspace(slices, cents)
-        per_dim = assigned.select(
-            "subspace", "cell", F.posexplode("v").alias("pos", "x")
-        ).groupBy("subspace", "cell", "pos").agg(
-            F.round(F.avg("x"), 6).alias("m")
-        )
-        cents = per_dim.groupBy("subspace", "cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("c")
+        cents = _cell_means(
+            _nearest_cell_per_subspace(slices, cents),
+            ["subspace", "cell"],
+            F.col("v"),
         )
     return cents
 
@@ -586,9 +588,9 @@ def apply_ivf_index(
     parquet replay.
 
     100 TB: cost is delta × k (one broadcast of the k-row centroid
-    table + the per-vector argmin window) — independent of the indexed
-    corpus size; the historical postings are never re-read, let alone
-    the historical vectors."""
+    table + the in-row argmin of ``_nearest_cell``, no shuffle) —
+    independent of the indexed corpus size; the historical postings are
+    never re-read, let alone the historical vectors."""
     d = delta.select(
         F.col(id_col).alias("vec_id"), _to_double(F.col(vec_col)).alias("v")
     )
@@ -684,12 +686,11 @@ def ivf_index_topk(
     """Search a persisted ``(centroids, postings)`` IVF index — the
     read path after any number of ``apply_ivf_index`` appends: route
     each query to its ``probe`` nearest FROZEN centroids by rounded
-    cosine (the same routing rule as ``ivf_topk``; probe>1 is the
-    recall knob ``ivf_topk_multiprobe`` provides for label cells),
-    then exact top-k among the probed cells' postings only, vectors
-    fetched by posting id. The final rank is GLOBAL per query across
-    probed cells (a posting lives in exactly one cell, so no
-    candidate dedup is needed).
+    cosine (``_probe_cells``, the routing ``ivf_topk`` uses for label
+    cells; probe>1 is the recall knob), then exact top-k among the
+    probed cells' postings only, vectors fetched by posting id. The
+    final rank is GLOBAL per query across probed cells (a posting
+    lives in exactly one cell, so no candidate dedup is needed).
 
     Differs from ``ivf_topk`` exactly where a persisted index should:
     routing uses the frozen quantizer centroids, NOT per-cell means
@@ -710,18 +711,7 @@ def ivf_index_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
-    routed = q.join(F.broadcast(centroids)).select(
-        "query_id",
-        "qvec",
-        "cell",
-        F.round(cosine(F.col("qvec"), F.col("c")), 6).alias("ccos"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("cell"))
-    assigned = (
-        routed.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= probe)
-        .select("query_id", "qvec", "cell")
-    )
+    assigned = _probe_cells(q, centroids, "c", probe)
     cand = (
         postings.join(F.broadcast(assigned), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -964,55 +954,6 @@ def sq8_index_topk(
     ).filter(F.col("rank") <= topk)
 
 
-def ivf_topk_multiprobe(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    k: int = 3,
-    probes: int = 2,
-) -> DataFrame:
-    """IVF with multi-probe: search the ``probes`` nearest cells instead
-    of one — the standard recall knob (quantization error near cell
-    boundaries is the probe=1 failure mode). Cost scales with
-    probes/n_cells of the corpus, still never a full scan."""
-    from pyspark.sql import Window
-
-    cents = label_centroids(corpus, label_col, vec_col)
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    routed = q.join(F.broadcast(cents)).select(
-        "query_id",
-        "qvec",
-        "cell",
-        F.round(cosine(F.col("qvec"), F.col("centroid")), 6).alias("ccos"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("cell"))
-    assigned = (
-        routed.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= probes)
-        .select("query_id", "qvec", "cell")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cvec"),
-        F.col(label_col).alias("cell"),
-    )
-    scored = (
-        c.join(F.broadcast(assigned), "cell")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
-
-
 def pq_codes(
     corpus: DataFrame,
     m: int = 2,
@@ -1024,8 +965,8 @@ def pq_codes(
 ) -> DataFrame:
     """Product-quantization codes (Jégou et al., TPAMI 2011): split each
     vector into ``m`` contiguous ``sub_dim``-dim subspaces, learn an
-    independent k-centroid codebook per subspace with the same
-    iteration-exact Lloyd recipe as ``kmeans_assign`` (6dp-rounded
+    independent k-centroid codebook per subspace with the
+    iteration-exact Lloyd recipe of ``kmeans_centroids`` (6dp-rounded
     centroids each round, so a DuckDB oracle replays every subspace's
     training bit-for-bit), and emit long form
     ``(vec_id, subspace, cell, dist)``.
@@ -1034,15 +975,37 @@ def pq_codes(
     cells from only m·k learned centroids; at 100 TB the codes column is
     what downstream ANN scans stream, never the vectors.
 
-    r17: the m per-subspace ``kmeans_assign`` chains are fused into one
-    ``_subspace_kmeans_assign`` train over the subspace-tagged slice
-    stream — one corpus scan per Lloyd pass instead of m, one
-    aggregation pair per iteration instead of m (value identity argued
-    and rowset-proven at `_subspace_kmeans_centroids`)."""
+    All m subspaces train in ONE ``_subspace_kmeans_assign`` chain over
+    the subspace-tagged slice stream — one corpus scan per Lloyd pass,
+    one aggregation pair per iteration (value identity with m separate
+    trains argued and rowset-proven at ``_subspace_kmeans_centroids``)."""
     base = corpus.select(
         F.col(id_col).alias("vec_id"), _to_double(F.col(vec_col)).alias("v")
     )
     return _subspace_kmeans_assign(base, m, sub_dim, k, iterations)
+
+
+def _recomputed_codebooks(
+    base: DataFrame, codes: DataFrame, cell_col: str, sub_dim: int
+) -> DataFrame:
+    """The one-shot ADC codebooks: ``(vec_id, v)`` ⋈ long-form codes,
+    then ``_cell_means`` of each member's subspace slice per
+    ``(subspace, cell_col)`` → ``(subspace, cell_col, cent)`` — the
+    generation a further Lloyd pass would train, which the oracle
+    replays. ALL subspaces in ONE pass; the tiny result (m·k·sub_dim
+    doubles) is pinned so the m LUT builds read it instead of replaying
+    the join."""
+    members = base.join(
+        codes.select("vec_id", "subspace", cell_col), "vec_id"
+    )
+    sub_slice = F.slice(
+        F.col("v"), (F.col("subspace") * sub_dim + 1).cast("int"), sub_dim
+    )
+    return (
+        _cell_means(members, ["subspace", cell_col], sub_slice)
+        .select("subspace", cell_col, F.col("c").alias("cent"))
+        .localCheckpoint(eager=True)
+    )
 
 
 def pq_adc_topk(
@@ -1056,118 +1019,26 @@ def pq_adc_topk(
     vec_col: str = "embedding",
     topk: int = 3,
 ) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes — the codes USED:
-    per query, a distance look-up table (k entries per subspace) against
-    the recomputed subspace centroids; a candidate's approximate distance
-    is the SUM of its code's LUT entries, never a touch of its raw vector.
-
-    Scale shape: the corpus side streams only its m-integer code row;
-    the LUTs (queries × m × k rows) BROADCAST, so scoring is m map-side
-    hash-join probes plus a per-query top-k window (WindowGroupLimit) —
-    no shuffle of vectors, no pairwise vector math. Centroids are
-    recomputed from the final assignment (per-dim 6dp-rounded means),
-    mirroring the learned-IVF convention, so the oracle replays them."""
-    from pyspark.sql import Window
-
-    # materialize the codes ONCE: they are referenced 2m times below
-    # (wide join + centroid recompute per subspace), and each reference
-    # would otherwise re-execute the full two-codebook Lloyd training —
-    # the codes table is m rows of 3 ints per vector, the cheapest thing
-    # in the whole plan to pin (measured 34.5 s → re-execution collapsed)
+    """Asymmetric-distance (ADC) top-k over PQ codes, one shot: train
+    and assign the codes (``pq_codes``), recompute each subspace's
+    codebook as the 6dp-rounded per-dim means of its final members
+    (what generation it+1 would train — the learned-IVF convention the
+    oracle replays), then search them with the index read path
+    ``pq_index_adc_topk``. The one-shot search IS the index search over
+    these recomputed codebooks."""
+    # pin the codes: the search pivots them and the recompute joins them,
+    # and each reference would otherwise re-run the whole Lloyd training
+    # (measured 34.5 s → re-execution collapsed)
     codes = pq_codes(
         corpus, m, sub_dim, k, iterations, id_col, vec_col
     ).localCheckpoint(eager=True)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _to_double(F.col(vec_col)).alias("qv")
+    base = corpus.select(
+        F.col(id_col).alias("vec_id"), _to_double(F.col(vec_col)).alias("v")
     )
-    # Wide code row via ONE conditional-aggregation pivot (r17): codes
-    # has exactly one row per (vec_id, subspace), so max(when(subspace=j,
-    # cell)) IS the subspace-j code — integer-exact, and one map-side-
-    # combinable exchange replaces the old m-filtered-scan + (m-1)
-    # vec_id self-join chain (each join an Exchange+Sort+SMJ; the codes
-    # table was scanned m times). Guide §2.4.
-    wide = codes.groupBy("vec_id").agg(
-        *[
-            F.max(F.when(F.col("subspace") == j, F.col("cell"))).alias(
-                f"c{j}"
-            )
-            for j in range(m)
-        ]
+    cents = _recomputed_codebooks(base, codes, "cell", sub_dim)
+    return pq_index_adc_topk(
+        cents, codes, queries, m, sub_dim, id_col, vec_col, topk
     )
-    # Centroid recompute for ALL subspaces in ONE corpus ⋈ codes pass
-    # (r17): the old loop joined the sliced corpus to the subspace-j
-    # codes and exploded it once PER SUBSPACE — m corpus scans, m joins,
-    # m aggregation trees (each LUT's broadcast build re-executed its
-    # own). Same groups, same member values, same round(avg, 6): group
-    # (subspace=j, cell, pos) holds exactly the old (c_j, pos) members.
-    # The tiny result (m·k·sub_dim doubles) is pinned so the m per-
-    # subspace LUT builds read it instead of replaying the corpus pass.
-    sub_all = (
-        corpus.select(
-            F.col(id_col).alias("vec_id"),
-            _to_double(F.col(vec_col)).alias("v"),
-        )
-        .join(codes.select("vec_id", "subspace", "cell"), "vec_id")
-        .select(
-            "subspace",
-            "cell",
-            F.posexplode(
-                F.slice(
-                    F.col("v"),
-                    (F.col("subspace") * sub_dim + 1).cast("int"),
-                    sub_dim,
-                )
-            ).alias("pos", "x"),
-        )
-    )
-    per_dim = sub_all.groupBy("subspace", "cell", "pos").agg(
-        F.round(F.avg("x"), 6).alias("mu")
-    )
-    cents_all = (
-        per_dim.groupBy("subspace", "cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mu"))),
-                lambda s: s["mu"],
-            ).alias("cent")
-        )
-        .localCheckpoint(eager=True)
-    )
-    luts = []
-    for j in range(m):
-        cents = cents_all.filter(F.col("subspace") == j).select(
-            F.col("cell").alias(f"c{j}"), "cent"
-        )
-        qsub = q.select(
-            "query_id", F.slice(F.col("qv"), j * sub_dim + 1, sub_dim).alias("qs")
-        )
-        d2 = F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("qs"), F.col("cent"), lambda x, y: (x - y) * (x - y)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-        luts.append(
-            qsub.join(F.broadcast(cents)).select(
-                "query_id", f"c{j}", d2.alias(f"d{j}")
-            )
-        )
-    scored = wide
-    for j, lut in enumerate(luts):
-        keys = [f"c{j}"] if j == 0 else ["query_id", f"c{j}"]
-        scored = scored.join(F.broadcast(lut), keys)
-    adc = F.round(_adc_fold(m), 6)
-    scored = scored.filter(F.col("vec_id") != F.col("query_id")).select(
-        "query_id", F.col("vec_id").alias("cand_id"), adc.alias("adc")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("cand_id"))
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).filter(F.col("rank") <= topk)
 
 
 def pq_codebooks(
@@ -1180,19 +1051,16 @@ def pq_codebooks(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """The frozen PQ quantizer artifact ``(subspace, cell, cent)`` —
-    one ``kmeans_centroids`` Lloyd train per contiguous ``sub_dim``-dim
-    subspace (the same iteration-exact 6dp-lattice recipe ``pq_codes``
-    trains through ``kmeans_assign``, so codes assigned against these
-    codebooks equal ``pq_codes``' in-query assignment bit-for-bit).
+    the fused ``_subspace_kmeans_centroids`` train over all m contiguous
+    ``sub_dim``-dim subspaces (one corpus scan per Lloyd pass), the
+    same chain ``pq_codes`` assigns from, so codes assigned against
+    these codebooks equal ``pq_codes``' assignment bit-for-bit.
 
     This is what a resumable PQ index PERSISTS: m·k centroid rows of
     ``sub_dim`` doubles — trivially parquet-sized, broadcastable
     forever after. Retraining would re-lattice every stored code, the
     exact invalidation the IVF freeze (``build_ivf_index``) exists to
-    prevent; the PQ twin freezes for the same reason.
-
-    r17: one fused ``_subspace_kmeans_centroids`` chain replaces the m
-    independent Lloyd trees (one corpus scan per pass instead of m)."""
+    prevent; the PQ twin freezes for the same reason."""
     base = corpus.select(
         F.col(id_col).alias("vec_id"), _to_double(F.col(vec_col)).alias("v")
     )
@@ -1292,10 +1160,11 @@ def pq_index_adc_topk(
     subspace), candidate distance = sum of its stored code's LUT
     entries, global top-k per query under (adc asc, id asc).
 
-    Differs from ``pq_adc_topk`` exactly where a persisted index
-    should (the ``ivf_index_topk`` convention): LUTs use the frozen
-    quantizer the stored codes were assigned under — never centroids
-    recomputed from current assignments, which drift as deltas append.
+    LUTs use whatever codebooks the caller passes: for a persisted
+    index, the frozen quantizer the stored codes were assigned under
+    (centroids recomputed from current assignments drift as deltas
+    append); the one-shot ``pq_adc_topk`` is this search over codebooks
+    recomputed from its own final assignment.
 
     100 TB: the corpus side streams m ints per vector (the wide code
     row — never a raw vector); LUTs are queries × m·k rows and
@@ -1326,16 +1195,7 @@ def pq_index_adc_topk(
         qsub = q.select(
             "query_id", F.slice(F.col("qv"), j * sub_dim + 1, sub_dim).alias("qs")
         )
-        d2 = F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("qs"), F.col("cent"), lambda x, y: (x - y) * (x - y)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
+        d2 = F.round(_sq_l2(F.col("qs"), F.col("cent")), 6)
         luts.append(
             qsub.join(F.broadcast(cents)).select(
                 "query_id", f"c{j}", d2.alias(f"d{j}")
@@ -1708,14 +1568,7 @@ def kcenter_greedy(
 
     def d2_to(lit_vec: list[float]) -> Column:
         arr = F.array(*[F.lit(float(x)) for x in lit_vec])
-        return F.round(
-            F.aggregate(
-                F.zip_with(F.col("v"), arr, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            9,
-        )
+        return F.round(_sq_l2(F.col("v"), arr), 9)
 
     state = (
         ev.filter(F.col("vid") != int(seed["vid"]))
@@ -1942,29 +1795,14 @@ def sign_bit_ann(
     )
 
 
-def _ivfpq_route_residuals(
-    corpus: DataFrame,
-    k_coarse: int,
-    iterations: int,
-    id_col: str,
-    vec_col: str,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared IVF-PQ front end: train the coarse quantizer, route every
-    vector, re-attach the k-row centroid table (broadcast; the
-    ``_nearest_cell`` contract drops the centroid array) and form the
-    residual ``v − c_cell``. Returns ``(coarse, routed)`` with routed =
-    ``(vec_id, cell, rv)``; BOTH are eagerly localCheckpoint-ed — the
-    coarse table tops the iterative Lloyd tree and the routed frame
-    feeds m downstream Lloyd trains plus the code emission (the
+def _route_residuals(base: DataFrame, coarse: DataFrame) -> DataFrame:
+    """Route each ``(vec_id, v)`` row to its nearest coarse cell
+    (``_nearest_cell``), re-attach the k-row centroid table (broadcast;
+    the pick drops the centroid array) and form the residual
+    ``v − c_cell`` → ``(vec_id, cell, rv)``, eagerly pinned: it feeds
+    the m subspace trains or assignments plus the cell re-attach (the
     iterative-state multi-consumer rule)."""
-    base = corpus.select(
-        F.col(id_col).alias("vec_id"), _to_double(F.col(vec_col)).alias("v")
-    )
-    coarse = kmeans_centroids(
-        corpus, k=k_coarse, iterations=iterations, id_col=id_col,
-        vec_col=vec_col,
-    ).localCheckpoint(eager=True)
-    routed = (
+    return (
         _nearest_cell(base, coarse)
         .select("vec_id", "cell", "v")
         .join(F.broadcast(coarse), "cell")
@@ -1977,27 +1815,47 @@ def _ivfpq_route_residuals(
         )
         .localCheckpoint(eager=True)
     )
-    return coarse, routed
 
 
-def _ivfpq_subspace_codes(
+def _ivfpq_route_residuals(
+    corpus: DataFrame,
+    k_coarse: int,
+    iterations: int,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """Shared IVF-PQ front end: train the coarse quantizer (pinned — it
+    tops the iterative Lloyd tree) and route every vector through
+    ``_route_residuals``. Returns ``(coarse, routed)``."""
+    base = corpus.select(
+        F.col(id_col).alias("vec_id"), _to_double(F.col(vec_col)).alias("v")
+    )
+    coarse = kmeans_centroids(
+        corpus, k=k_coarse, iterations=iterations, id_col=id_col,
+        vec_col=vec_col,
+    ).localCheckpoint(eager=True)
+    return coarse, _route_residuals(base, coarse)
+
+
+def _ivfpq_codes(
     routed: DataFrame,
     m: int,
     sub_dim: int,
     k_pq: int,
     iterations: int,
 ) -> DataFrame:
-    """Per-subspace residual PQ → long form ``(vec_id, subspace,
-    pq_cell, dist)``. r17: the m per-slice ``kmeans_assign`` Lloyd
-    chains fuse into one ``_subspace_kmeans_assign`` train over the
+    """Per-subspace residual PQ with the coarse cell re-attached → long
+    form ``(vec_id, cell, subspace, pq_cell, dist)``. All m residual
+    trains run as one ``_subspace_kmeans_assign`` chain over the
     subspace-tagged residual slice stream — one scan of the (pinned)
-    routed frame per Lloyd pass instead of m."""
-    return _subspace_kmeans_assign(
+    routed frame per Lloyd pass."""
+    codes = _subspace_kmeans_assign(
         routed.select("vec_id", F.col("rv").alias("v")),
         m, sub_dim, k_pq, iterations,
     ).select(
         "vec_id", "subspace", F.col("cell").alias("pq_cell"), "dist"
     )
+    return routed.select("vec_id", "cell").join(codes, "vec_id")
 
 
 def ivfpq_residual_codes(
@@ -2037,10 +1895,7 @@ def ivfpq_residual_codes(
     _coarse, routed = _ivfpq_route_residuals(
         corpus, k_coarse, iterations, id_col, vec_col
     )
-    codes = _ivfpq_subspace_codes(routed, m, sub_dim, k_pq, iterations)
-    return routed.select("vec_id", "cell").join(codes, "vec_id").select(
-        "vec_id", "cell", "subspace", "pq_cell", "dist"
-    )
+    return _ivfpq_codes(routed, m, sub_dim, k_pq, iterations)
 
 
 def ivfpq_adc_topk(
@@ -2056,157 +1911,36 @@ def ivfpq_adc_topk(
     topk: int = 3,
     probe: int = 1,
 ) -> DataFrame:
-    """IVF-PQ search with asymmetric distance (the IndexIVFPQ read
-    path): route each query to its ``probe`` nearest coarse cells by
-    the SAME rounded-L2 argmin the corpus was assigned under, compute
-    the query's residual PER PROBED CELL (``q − c_cell`` — residual
-    LUTs are cell-dependent, the defining subtlety of IVF-PQ), build
-    the per-(query, cell, subspace) LUT against the residual
-    codebooks, and score only the probed cells' members: adc =
-    Σ_j LUT[cell, j, code_j]. Global (adc asc, id asc) top-k per
-    query across probed cells.
+    """IVF-PQ search with asymmetric distance, one shot: train the
+    coarse quantizer and route the corpus once, train and assign the
+    residual codes with their coarse cell (``_ivfpq_codes``), recompute
+    each subspace's residual codebook as the 6dp-rounded per-dim means
+    of its final members (the ``pq_adc_topk`` recompute convention,
+    which the oracle replays with the same cent CTEs as
+    sim_pq_adc_topk), then search them with the index read path
+    ``ivfpq_index_adc_topk`` at ``probe``. The one-shot search IS the
+    index search over these recomputed codebooks.
 
     The coarse train and the corpus routing run ONCE and feed both the
-    encoder and the LUT recompute (the r15 restructure: calling the
-    encoder and then re-training coarse for routing executed the
-    whole coarse Lloyd twice — measured 6.5 s → 4.3 s min-of-2 at sf0.1).
-
-    100 TB: candidates stream (cell, m codes) per vector — the probed-
-    cell filter is the broadcast routing join, the LUTs (queries ×
-    probe × m × k_pq rows) broadcast, and no candidate's raw vector is
-    ever touched: the scan cost is probe/k_coarse of the CODE table,
-    the IVF pruning and the PQ constant-cost scoring composed."""
-    from pyspark.sql import Window
-
-    coarse, routed_corpus = _ivfpq_route_residuals(
+    encoder and the codebook recompute (calling the encoder and then
+    re-training coarse for routing executed the whole coarse Lloyd
+    twice — measured 6.5 s → 4.3 s min-of-2 at sf0.1)."""
+    coarse, routed = _ivfpq_route_residuals(
         corpus, k_coarse, iterations, id_col, vec_col
     )
-    # the code table is referenced once per subspace in the wide join
-    # below AND its Lloyd trees are expensive — pin it
-    codes = _ivfpq_subspace_codes(
-        routed_corpus, m, sub_dim, k_pq, iterations
+    # pin the codes: the search pivots them and the recompute joins them,
+    # and their Lloyd trees are expensive
+    codes = _ivfpq_codes(
+        routed, m, sub_dim, k_pq, iterations
     ).localCheckpoint(eager=True)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _to_double(F.col(vec_col)).alias("qv")
+    cents = _recomputed_codebooks(
+        routed.select("vec_id", F.col("rv").alias("v")), codes, "pq_cell",
+        sub_dim,
     )
-    qdist = F.round(
-        F.aggregate(
-            F.zip_with(F.col("qv"), F.col("c"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
+    return ivfpq_index_adc_topk(
+        coarse, cents, codes, queries, m, sub_dim, id_col, vec_col, topk,
+        probe,
     )
-    wq = Window.partitionBy("query_id").orderBy("qd", "cell")
-    qrouted = (
-        q.join(F.broadcast(coarse))
-        .select(
-            "query_id",
-            "cell",
-            qdist.alias("qd"),
-            F.zip_with(F.col("qv"), F.col("c"), lambda x, y: x - y).alias(
-                "qres"
-            ),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= probe)
-        .select("query_id", "cell", "qres")
-    )
-    # Wide code row via ONE conditional-aggregation pivot + ONE join to
-    # re-attach the coarse cell (r17) — replaces the m-step vec_id join
-    # chain that scanned the pinned codes RDD m times (guide §2.4).
-    wide = routed_corpus.select("vec_id", "cell").join(
-        codes.groupBy("vec_id").agg(
-            *[
-                F.max(
-                    F.when(F.col("subspace") == j, F.col("pq_cell"))
-                ).alias(f"c{j}")
-                for j in range(m)
-            ]
-        ),
-        "vec_id",
-    )
-    # residual codebooks for the LUTs: per (subspace, pq_cell)
-    # 6dp-rounded means of the member residual slices — the
-    # ``pq_adc_topk`` recompute convention (means OF the final
-    # assignment, i.e. what generation it+1 would train; NOT the
-    # generation the assignment ranked against), which the oracle
-    # replays with the same cent CTEs as sim_pq_adc_topk. r17: ALL
-    # subspaces in one routed ⋈ codes pass (the old loop exploded the
-    # residual frame once per subspace — m scans, m joins, and each
-    # LUT's broadcast build re-executed its own aggregation tree);
-    # groups and member values are unchanged, and the tiny result
-    # (m·k·sub_dim doubles) is pinned for the m LUT builds.
-    sub_all = (
-        routed_corpus.select("vec_id", "rv")
-        .join(codes.select("vec_id", "subspace", "pq_cell"), "vec_id")
-        .select(
-            "subspace",
-            "pq_cell",
-            F.posexplode(
-                F.slice(
-                    F.col("rv"),
-                    (F.col("subspace") * sub_dim + 1).cast("int"),
-                    sub_dim,
-                )
-            ).alias("pos", "x"),
-        )
-    )
-    per_dim = sub_all.groupBy("subspace", "pq_cell", "pos").agg(
-        F.round(F.avg("x"), 6).alias("mu")
-    )
-    cents_all = (
-        per_dim.groupBy("subspace", "pq_cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mu"))),
-                lambda s: s["mu"],
-            ).alias("cent")
-        )
-        .localCheckpoint(eager=True)
-    )
-    luts = []
-    for j in range(m):
-        cents = cents_all.filter(F.col("subspace") == j).select(
-            F.col("pq_cell").alias(f"c{j}"), "cent"
-        )
-        qsub = qrouted.select(
-            "query_id",
-            "cell",
-            F.slice(F.col("qres"), j * sub_dim + 1, sub_dim).alias("qs"),
-        )
-        d2 = F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("qs"), F.col("cent"), lambda x, y: (x - y) * (x - y)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-        luts.append(
-            qsub.join(F.broadcast(cents)).select(
-                "query_id", "cell", f"c{j}", d2.alias(f"d{j}")
-            )
-        )
-    scored = wide  # (vec_id, cell, c0..c{m-1})
-    for j, lut in enumerate(luts):
-        keys = (
-            ["cell", f"c{j}"] if j == 0 else ["query_id", "cell", f"c{j}"]
-        )
-        scored = scored.join(F.broadcast(lut), keys)
-    adc = F.round(_adc_fold(m), 6)
-    scored = scored.filter(F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("cand_id"),
-        "cell",
-        adc.alias("adc"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("cand_id"))
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).filter(F.col("rank") <= topk)
 
 
 def delete_from_vector_index(
@@ -2291,26 +2025,14 @@ def _assign_ivfpq_codes(
     Both quantizer tables broadcast (k_coarse rows + m·k_pq rows), so
     cost is rows × (k_coarse + m·k_pq) regardless of how much history
     the index holds — the persisted-index family's delta-cost
-    contract. The routed frame feeds m subspace assignments plus the
-    final cell re-attach, so it is eagerly pinned (re-running the
-    residual zip_with m+1 times otherwise)."""
+    contract. Routing is ``_route_residuals``, the same pinned router
+    the build uses."""
     base = df.select(
         F.col(id_col).alias("vec_id"), _to_double(F.col(vec_col)).alias("v")
     )
-    routed = (
-        _nearest_cell(base, coarse)
-        .select("vec_id", "cell", "v")
-        .join(F.broadcast(coarse), "cell")
-        .select(
-            "vec_id",
-            "cell",
-            F.zip_with(F.col("v"), F.col("c"), lambda x, y: x - y).alias(
-                "rv"
-            ),
-        )
-        .localCheckpoint(eager=True)
+    return _frozen_codes_on_routed(
+        _route_residuals(base, coarse), codebooks, m, sub_dim
     )
-    return _frozen_codes_on_routed(routed, codebooks, m, sub_dim)
 
 
 def build_ivfpq_index(
@@ -2416,11 +2138,11 @@ def ivfpq_index_adc_topk(
     Σ_j LUT[cell, j, code_j]; global (adc asc, id asc) top-k per query
     across probed cells.
 
-    Differs from ``ivfpq_adc_topk`` exactly where a persisted index
-    should (the ``pq_index_adc_topk`` / ``ivf_index_topk`` convention):
-    LUTs use the frozen quantizers the stored codes were assigned
-    under — never centroid means recomputed from current assignments,
-    which drift as deltas append.
+    LUTs use whatever residual codebooks the caller passes: for a
+    persisted index, the frozen quantizers the stored codes were
+    assigned under (centroid means recomputed from current assignments
+    drift as deltas append); the one-shot ``ivfpq_adc_topk`` is this
+    search over codebooks recomputed from its own final assignment.
 
     100 TB: candidates stream (cell, m codes) per vector; the probed-
     cell pruning is the broadcast LUT join on cell (only probed cells
@@ -2432,14 +2154,7 @@ def ivfpq_index_adc_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"), _to_double(F.col(vec_col)).alias("qv")
     )
-    qdist = F.round(
-        F.aggregate(
-            F.zip_with(F.col("qv"), F.col("c"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
+    qdist = F.round(_sq_l2(F.col("qv"), F.col("c")), 6)
     wq = Window.partitionBy("query_id").orderBy("qd", "cell")
     qrouted = (
         q.join(F.broadcast(coarse))
@@ -2479,16 +2194,7 @@ def ivfpq_index_adc_topk(
             "cell",
             F.slice(F.col("qres"), j * sub_dim + 1, sub_dim).alias("qs"),
         )
-        d2 = F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("qs"), F.col("cent"), lambda x, y: (x - y) * (x - y)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
+        d2 = F.round(_sq_l2(F.col("qs"), F.col("cent")), 6)
         luts.append(
             qsub.join(F.broadcast(cents)).select(
                 "query_id", "cell", f"c{j}", d2.alias(f"d{j}")

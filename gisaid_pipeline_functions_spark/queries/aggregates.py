@@ -1056,13 +1056,11 @@ _BOOT_W_SQL = (
 def agg_poisson_bootstrap_ci(spark, sf_dir):
     from pyspark.sql import Window
 
-    ev = spread(
-        load_table(spark, sf_dir, "events").select(
-            "event_id",
-            F.floor(F.col("value") * 1000000.0 + 0.5).cast("long").alias("vu"),
-        )
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id",
+        F.floor(F.col("value") * 1000000.0 + 0.5).cast("long").alias("vu"),
     )
-    rep = ev.withColumn(
+    rep = spread(ev).withColumn(
         "b", F.explode(F.sequence(F.lit(0), F.lit(_BOOT_B - 1)))
     )
     h = F.md5(

@@ -461,10 +461,10 @@ def sim_quantized_rerank(spark, sf_dir):
     """,
 )
 def sim_ivf_multiprobe(spark, sf_dir):
-    from ..operators.similarity import ivf_topk_multiprobe
-
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk_multiprobe(emb, emb.filter(F.col("vec_id") < 5), k=3, probes=2)
+    return ivf_topk(emb, emb.filter(F.col("vec_id") < 5), k=3, probe=2).select(
+        "query_id", "cand_id", "cos", "rank"
+    )
 
 
 _PQ_CHAINS = (

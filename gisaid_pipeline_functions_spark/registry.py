@@ -92,6 +92,18 @@ _RECHECK_ROUND = 19
 #   function operators/layout.py `spread`, which reads the physical plan
 #   instead of counting partitions (found by wrapping DataFrame.rdd while
 #   building the whole registry).
+# - every query whose build reaches a vector-search function that
+#   changed when each ANN index got one search (found the same way, by
+#   wrapping the changed operators/similarity.py functions while building
+#   the whole registry): the one-shot PQ / IVF-PQ ADC searches now call
+#   the index read path, ivf_topk took over ivf_topk_multiprobe with a
+#   `probe` argument and shares its cosine routing with ivf_index_topk,
+#   and the squared-L2 fold, the nearest-centroid pick, the centroid
+#   recompute and the residual router are each one helper (kmeans
+#   training, PQ/IVF-PQ encoding, kcenter_greedy).
+#   plan_udf_discipline (already listed) plans sim_pq_adc_topk.
+#   agg_poisson_bootstrap_ci (already listed) also changed then: its
+#   point estimate reads the events scan before `spread`.
 _RECHECK_FIRST = frozenset(
     {
         "topk_pagination",
@@ -135,6 +147,29 @@ _RECHECK_FIRST = frozenset(
         "multimodal_wav_stats",
         "multimodal_audio_energy",
         "multimodal_patchify",
+        "sample_kcenter_coreset",
+        "sim_centroid_outlier",
+        "sim_incremental_ivf",
+        "sim_incremental_ivf_search",
+        "sim_incremental_ivfpq",
+        "sim_incremental_ivfpq_search",
+        "sim_incremental_pq",
+        "sim_incremental_pq_search",
+        "sim_ivf_drift",
+        "sim_ivf_index_delete",
+        "sim_ivf_index_multiprobe",
+        "sim_ivf_learned",
+        "sim_ivf_multiprobe",
+        "sim_ivf_topk",
+        "sim_ivfpq_adc_search",
+        "sim_ivfpq_codes",
+        "sim_kmeans_cells",
+        "sim_ndcg_eval",
+        "sim_pq_adc_topk",
+        "sim_pq_codes",
+        "sim_recall_at_k",
+        "sim_semdedup",
+        "streaming_ivf_append_hash",
     }
 )
 

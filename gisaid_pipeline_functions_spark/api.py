@@ -15,7 +15,7 @@ columns, disk handoffs are one DAG.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.strings import x_content
@@ -43,12 +43,14 @@ def read_msa_all(
     totals: dict[str, int],
     ref_lengths: dict[str, int],
 ) -> dict[str, MsaReaderOutputs]:
-    """MSA_Reader.read_msa_all (MSA_Reader.py:1292–1329): the full report
+    """MSA_Reader.read_msa_all (MSA_Reader.py:1292–1329): the report
     suite for every protein. The reference loops proteins sequentially
     (P kernel passes, each rescanning); here the kernel runs ONCE over the
     whole multi-protein table (it already takes the full references dict),
     the event table is cached, and each protein's report suite is a filter
-    slice of that one cached pass."""
+    slice of that one cached pass. A suite builds each report on first
+    access (``plans.msa_reader.MsaReaderOutputs``), so only the reports a
+    caller reads are built."""
     variants = call_variants(aligned, references).cache()
     return {
         protein: reports_from_variants(
@@ -106,6 +108,10 @@ def pipeline_seq_counts(stages: dict[str, DataFrame], key_col: str = "protein") 
     return out.na.fill(0)
 
 
+# every value filter_sequences' reason column takes
+_REASONS = ("non_human", "too_short", "too_long", "too_ambiguous", "pass")
+
+
 def filter_sequences(
     records: DataFrame,
     out_path: str | None = None,
@@ -116,9 +122,14 @@ def filter_sequences(
 ) -> tuple[DataFrame, DataFrame]:
     """Sequence_Filter.filter_sequences (Sequence_Filter.py:92–156):
     host / length / ambiguity filter with the rejection tally, both from
-    one reason column. Returns (passing records, tally); with ``out_path``
-    it also writes the passing FASTA (refusing overwrite, like the
-    reference), a job separate from the tally's."""
+    one reason column. Returns (passing records, tally): the tally has one
+    ``(_reason, n)`` row per reason that has records.
+
+    With ``out_path`` it also writes the passing FASTA (refusing
+    overwrite, like the reference), and that write is the only scan: the
+    tally is counted by an observation on the write and returned as a
+    local DataFrame, whose reads run no Spark job. Without it the tally is
+    a lazy ``groupBy``. ``passing`` is lazy either way."""
     seq_len = F.length("seq")
     reason = (
         # null-safe: a header with fewer than 7 fields has a NULL host,
@@ -130,11 +141,24 @@ def filter_sequences(
         .otherwise("pass")
     )
     tagged = records.withColumn("_reason", reason)
-    tally = tagged.groupBy("_reason").agg(F.count(F.lit(1)).alias("n"))
-    passing = tagged.filter(F.col("_reason") == "pass").drop("_reason")
-    if out_path is not None:
-        write_fasta(passing, out_path)
-    return passing, tally
+
+    def passed(df: DataFrame) -> DataFrame:
+        return df.filter(F.col("_reason") == "pass").drop("_reason")
+
+    if out_path is None:
+        tally = tagged.groupBy("_reason").agg(F.count(F.lit(1)).alias("n"))
+        return passed(tagged), tally
+    obs = Observation()
+    observed = tagged.observe(
+        obs, *(F.count_if(F.col("_reason") == r).alias(r) for r in _REASONS)
+    )
+    write_fasta(passed(observed), out_path)
+    # an inline VALUES table is a local relation: reading it runs no job
+    values = ", ".join(f"('{r}', {n}L)" for r, n in obs.get.items())
+    tally = records.sparkSession.sql(
+        f"SELECT * FROM VALUES {values} AS t(_reason, n)"
+    ).filter(F.col("n") > 0)
+    return passed(tagged), tally
 
 
 def split_by_protein(spark: SparkSession, fasta_path: str, out_dir: str) -> None:

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -305,6 +305,11 @@ def call_variants(aligned: DataFrame, references: dict[str, str]) -> DataFrame:
     return spread(aligned.select(*cols)).mapInPandas(run, VARIANT_SCHEMA)
 
 
+def _multi_residue_del() -> Column:
+    """An event deleting more than one reference residue."""
+    return (F.col("Type") == "del") & F.col("AA_End_Ref").isNotNull()
+
+
 def break_up_deletions(variants: DataFrame) -> DataFrame:
     """Explode multi-residue deletions into one row per deleted residue
     (semantics of MSA_Reader.py:1038–1077), natively: the first residue
@@ -314,7 +319,7 @@ def break_up_deletions(variants: DataFrame) -> DataFrame:
     Positions of residues 2..n come from the reference numbering
     (contiguous in ref space); their residue letters come from
     ``Ref_Residues`` (gap-stripped, so index = offset)."""
-    is_multi = (F.col("Type") == "del") & F.col("AA_End_Ref").isNotNull()
+    is_multi = _multi_residue_del()
 
     # first record: ONLY the code is rewritten to single-del form — end
     # fields stay (the reference mutates just .code, MSA_Reader.py:1071)
@@ -378,27 +383,41 @@ def mutation_count_table(
     """A7 — per-position × type Σ(cluster_size) with a full 1..L position
     spine so zero-variant positions appear (MSA_Reader.py:1107–1162).
 
+    One scan of the events: each event covers the residues
+    ``AA_Start_Ref..last`` — ``last`` is ``AA_End_Ref`` for a multi-residue
+    deletion (the positions ``break_up_deletions`` gives it, one row per
+    deleted residue) and ``AA_Start_Ref`` otherwise — exploded with
+    ``sequence``, then one ``groupBy`` sums ``Cluster_Size`` per type and
+    the spine left-joins the sums.
+
     Parity details: grouping is strictly by non-null ``AA_Start_Ref``
-    (N-terminal extensions have none and silently drop out of this table,
-    as in the reference's ``record.get_ref_start()==j`` subsetting);
-    ``Percent_Variants`` is the reference's formatted string ``"x.xxxx%"``
-    (MSA_Reader.py:1138–1160).
+    (N-terminal extensions have none — ``sequence`` of NULL explodes to no
+    rows — and silently drop out of this table, as in the reference's
+    ``record.get_ref_start()==j`` subsetting); ``Percent_Variants`` is the
+    reference's formatted string ``"x.xxxx%"`` (MSA_Reader.py:1138–1160).
     """
     spark = variants.sparkSession
-    exploded = break_up_deletions(variants)
-    typed = exploded.filter(F.col("AA_Start_Ref").isNotNull()).select(
-        F.col("AA_Start_Ref").alias("Residue_Number"), "Type", "Cluster_Size"
-    )
+    types = ["sub", "ins", "del", "ext", "delins"]
+    last = F.when(_multi_residue_del(), F.col("AA_End_Ref")).otherwise(F.col("AA_Start_Ref"))
     counts = (
-        typed.groupBy("Residue_Number")
-        .pivot("Type", ["sub", "ins", "del", "ext", "delins"])
-        .agg(F.coalesce(F.sum("Cluster_Size"), F.lit(0)))
+        variants.select(
+            F.explode(F.sequence("AA_Start_Ref", last)).alias("Residue_Number"),
+            "Type",
+            "Cluster_Size",
+        )
+        .groupBy("Residue_Number")
+        .agg(
+            *(
+                F.sum(F.when(F.col("Type") == t, F.col("Cluster_Size")).otherwise(0)).alias(t)
+                for t in types
+            )
+        )
     )
     spine = spark.range(1, ref_length + 1).select(
         F.col("id").alias("Residue_Number")
     )
-    out = spine.join(counts, "Residue_Number", "left").na.fill(
-        0, ["sub", "ins", "del", "ext", "delins"]
+    out = spine.join(counts, "Residue_Number", "left").select(
+        "Residue_Number", *(F.coalesce(F.col(t), F.lit(0)).alias(t) for t in types)
     )
     total = (
         F.col("sub") + F.col("ins") + F.col("del") + F.col("ext") + F.col("delins")

@@ -104,6 +104,11 @@ _RECHECK_ROUND = 19
 #   plan_udf_discipline (already listed) plans sim_pq_adc_topk.
 #   agg_poisson_bootstrap_ci (already listed) also changed then: its
 #   point estimate reads the events scan before `spread`.
+# - variant_mutation_counts (already listed) is the only query whose
+#   build reaches operators/variant_caller.py `mutation_count_table`,
+#   now one scan of the events (explode(sequence) and one groupBy, no
+#   deletion union and no pivot); found the same way. No query reaches
+#   `api.filter_sequences` or `plans/msa_reader.py`.
 _RECHECK_FIRST = frozenset(
     {
         "topk_pagination",

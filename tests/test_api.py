@@ -97,6 +97,65 @@ def test_filter_sequences(spark):
     assert t["pass"] + t["non_human"] + t["too_ambiguous"] == records.count()
 
 
+def _fasta_pairs(path) -> set[tuple[str, str]]:
+    """(header line, sequence line) of every record in the part files: a
+    FASTA written by write_fasta has one line per header and sequence."""
+    import glob
+
+    lines = [ln for part in glob.glob(f"{path}/part-*") for ln in open(part).read().splitlines()]
+    return set(zip(lines[::2], lines[1::2]))
+
+
+def test_filter_sequences_observed_tally(spark, tmp_path):
+    # with out_path the write is the only scan: the tally is observed on it
+    # and must hold the rows the groupBy tally holds (no row for a reason
+    # with no records), without running a job of its own
+    from pyspark.errors import AnalysisException
+
+    records = spark.createDataFrame(
+        [
+            ("Spike|a|b|E1|c|d|Human", "MFVFLVLLPL", "Human"),
+            ("Spike|a|b|E2|c|d|Bat", "MFVFLVLLPL", "Bat"),
+            ("Spike|a|b|E3|c|d|Human", "MXXXXXXXPL", "Human"),
+            ("Spike|a|b|E4", "MFVFLVLLPL", None),  # NULL host
+            ("Spike|a|b|E5|c|d|Human", "MF", "Human"),
+            ("NSP5|a|b|E6|c|d|Human", "KKLLMMNNPP", "Human"),
+        ],
+        "header string, seq string, host string",
+    )
+    bounds = {"lower_bound": 5, "upper_bound": 100}
+    _, grouped = api.filter_sequences(records, **bounds)
+    out = tmp_path / "filtered"
+    passing, tally = api.filter_sequences(records, out_path=str(out), **bounds)
+
+    sc = spark.sparkContext
+    group = "test-observed-tally"
+    sc.setJobGroup(group, "collect the observed tally", False)
+    try:
+        rows = tally.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    want = {r["_reason"]: r["n"] for r in grouped.collect()}
+    assert want == {"pass": 2, "non_human": 2, "too_ambiguous": 1, "too_short": 1}
+    assert {r["_reason"]: r["n"] for r in rows} == want
+    assert len(rows) == len(want)  # too_long has no records and no row
+    assert tally.schema.simpleString() == "struct<_reason:string,n:bigint>"
+
+    assert _fasta_pairs(out) == {
+        (">Spike|a|b|E1|c|d|Human", "MFVFLVLLPL"),
+        (">NSP5|a|b|E6|c|d|Human", "KKLLMMNNPP"),
+    }
+    assert {r["header"] for r in passing.collect()} == {
+        "Spike|a|b|E1|c|d|Human",
+        "NSP5|a|b|E6|c|d|Human",
+    }
+    with pytest.raises(AnalysisException, match="already exists"):
+        api.filter_sequences(records, out_path=str(out), **bounds)
+
+
 def test_split_by_protein(spark, tmp_path):
     f = tmp_path / "in.fasta"
     f.write_text(">Spike|i|d|E1|a|b|Human\nMF\n>NSP5|i|d|E2|a|b|Human\nKK\n")

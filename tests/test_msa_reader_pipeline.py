@@ -100,3 +100,77 @@ def test_headerless_tsv_positional_schema(spark, tmp_path):
     rows = {r["Cluster_Name"]: r for r in df.collect()}
     assert rows["Uniq1"]["Cluster_Size"] == 3
     assert rows["Uniq2"]["Input_ID"] == "h2|x|y|EPI_2"
+
+
+_BUILDERS = (
+    "variants_by_cluster",
+    "cluster_report_text",
+    "code_report_text",
+    "mutation_csv",
+    "mutation_count_table",
+)
+_REPORTS = (
+    "variants_raw",
+    "by_cluster",
+    "cluster_report",
+    "sub_report",
+    "ins_report",
+    "del_report",
+    "indel_report",
+    "all_by_code",
+    "variant_counts",
+)
+
+
+def test_report_suite_builds_only_what_is_read(spark, monkeypatch):
+    # a caller reading the event table and the count table (the benchmark's
+    # two outputs) must not pay for the other seven reports' analysis
+    import dataclasses
+    from collections import Counter
+
+    from pyspark.sql import DataFrame
+
+    from gisaid_pipeline_functions_spark.operators.variant_caller import call_variants
+    from gisaid_pipeline_functions_spark.plans import msa_reader
+
+    calls: Counter = Counter()
+    for name in _BUILDERS:
+        def counted(*args, _fn=getattr(msa_reader, name), _name=name, **kwargs):
+            calls[_name] += 1
+            return _fn(*args, **kwargs)
+
+        monkeypatch.setattr(msa_reader, name, counted)
+    aligned = spark.createDataFrame(
+        [("S", "Uniq1", 10, "MSKTPAQTLV"), ("S", "Uniq2", 5, "MS---AQTLV")],
+        "protein string, cluster_id string, cluster_size long, aligned_seq string",
+    )
+    variants = call_variants(aligned, {"S": "MSKLPAQTLV"}).cache()
+
+    sc = spark.sparkContext
+    group = "test-lazy-report-suite"
+    sc.setJobGroup(group, "build a report suite, read two reports", False)
+    try:
+        suite = msa_reader.reports_from_variants(variants, total_seq=17, ref_length=10)
+        read = (suite.variants_raw, suite.variant_counts)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert calls == {"mutation_count_table": 1}
+    assert read[0] is variants
+
+    assert dataclasses.is_dataclass(suite)
+    for name in _REPORTS:
+        assert isinstance(getattr(suite, name), DataFrame), name
+    assert calls == {
+        "variants_by_cluster": 1,
+        "cluster_report_text": 1,
+        "code_report_text": 4,
+        "mutation_csv": 1,
+        "mutation_count_table": 1,
+    }
+    # built once: a second read is the same object and calls no builder
+    for name in _REPORTS:
+        assert getattr(suite, name) is getattr(suite, name), name
+    assert sum(calls.values()) == 8
+    assert suite.variant_counts.count() == 10

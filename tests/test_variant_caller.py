@@ -255,3 +255,53 @@ def test_kernel_realistic_msa_length(spark):
     assert len(by_cid["scan"]) == 1
     dele = by_cid["scan"][0]
     assert dele["Type"] == "del" and dele["AA_Start_Ref"] == 101 and dele["AA_End_Ref"] == 103
+
+
+def test_mutation_count_table_matches_two_step_reference(spark):
+    # the reference's Part 4 shape: break multi-residue deletions into one
+    # row per residue, then count Σ cluster_size per (position, type) for
+    # the rows with a reference start; the count table must equal that
+    #   ref columns:  - - M S K L P - A Q T  L  V  C  H  -  K
+    #   positions:        1 2 3 4 5   6 7 8  9 10 11 12    13
+    ref = "--MSKLP-AQTLVCH-K"
+    aligned = spark.createDataFrame(
+        [
+            ("P", "next", 3, "GGMSKLP-AQTLVCH-K"),    # N-ext M1extGG, NULL start
+            ("P", "mdel", 5, "--MS----AQTLVCH-K"),    # multi del K3_P5del
+            ("P", "ins", 7, "--MSKLPFAQTLVCH-K"),     # ins P5_A6insF
+            ("P", "delins", 11, "--MSKLP-AQTLV--WK"),  # delins C11_H12delinsW
+            ("P", "sub", 13, "--MSKTP-AQTLVCH-K"),    # sub L4T on a deleted residue
+            ("P", "del1", 2, "--MSKLP-AQT-VCH-K"),    # single del L9del
+        ],
+        "protein string, cluster_id string, cluster_size long, aligned_seq string",
+    )
+    variants = call_variants(aligned, {"P": ref}).cache()
+    codes = {r["Code"]: r["AA_Start_Ref"] for r in variants.collect()}
+    assert codes == {
+        "M1extGG": None, "K3_P5del": 3, "P5_A6insF": 5,
+        "C11_H12delinsW": 11, "L4T": 4, "L9del": 9,
+    }
+
+    ref_length, total_seq = 13, 40
+    types = ("sub", "ins", "del", "ext", "delins")
+    want = {pos: dict.fromkeys(types, 0) for pos in range(1, ref_length + 1)}
+    for r in break_up_deletions(variants).collect():
+        if r["AA_Start_Ref"] is not None:
+            want[r["AA_Start_Ref"]][r["Type"]] += r["Cluster_Size"]
+    expected = {
+        pos: (
+            sum(c.values()),
+            f"{sum(c.values()) * 100 / total_seq:.4f}%",
+            c["sub"], c["ins"], c["del"], c["ext"], c["delins"],
+        )
+        for pos, c in want.items()
+    }
+
+    out = mutation_count_table(variants, ref_length, total_seq)
+    assert out.columns == [
+        "Residue_Number", "Total_Variants", "Percent_Variants", "Substitutions",
+        "Insertions", "Deletions", "Extensions", "Indels",
+    ]
+    got = {r[0]: tuple(r[1:]) for r in out.collect()}
+    assert got == expected
+    assert got[4][0] == 18 and got[5] == (12, "30.0000%", 0, 7, 5, 0, 0)

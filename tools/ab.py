@@ -7,7 +7,10 @@ TREE_A is the baseline (e.g. a ``git archive`` of the parent commit),
 TREE_B the change. Each pair runs both trees, each in a fresh process
 (a fresh JVM), and alternates which tree runs first: pair 1 runs A then
 B, pair 2 runs B then A, and so on, so a box that slows down or warms
-up over the run loads both sides alike. Inside a process every query is
+up over the run loads both sides alike. Before pair 1, one warm-up
+process per tree runs and is discarded: the first processes on a box
+run 1.3-2x slower on both trees, which would otherwise widen the
+parent's spread. Inside a process every query is
 timed min-of-3 build+write by ``harness.time_noop`` on the tree's own
 ``session.get_spark`` (cpus from $SPARK_GRAFT_CPUS, as bench.py),
 clearing caches after the three reps.
@@ -95,6 +98,12 @@ def main() -> None:
         raise SystemExit(__doc__)
     trees = {"A": str(Path(args[0]).resolve()), "B": str(Path(args[1]).resolve())}
     names = args[2:]
+
+    # a box's first Spark processes run 1.3-2x slower than later ones, on
+    # either tree: one discarded process per tree takes that hit
+    print("warm-up (discarded): A then B", flush=True)
+    for side in ("A", "B"):
+        _run(trees[side], sf_dir, names)
 
     times = {"A": [], "B": []}
     for p in range(pairs):

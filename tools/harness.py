@@ -5,7 +5,8 @@ obeys the CLAUDE.md measurement traps by construction instead of by hand:
 
 - ``driver_session``: the vanilla session the round driver compares
   CORRECTNESS rows in (``local[cpus]``, shuffle partitions = cpus, UTC,
-  UI off). Timing scripts do NOT use it: they take the bench config from
+  UI and console progress bar off). Timing scripts do NOT use it: they
+  take the bench config from
   ``gisaid_pipeline_functions_spark.session.get_spark``.
 - ``round_number``: the round an artifact is stamped with.
 - ``calibrate``: the pure-CPU shuffle+aggregate calibration op.
@@ -38,6 +39,8 @@ def driver_session(cpus: int):
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # no [Stage N:...] bars on stderr: they bury the drive's result lines
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
